@@ -2,12 +2,10 @@
 
 The reference models data as a named pair-RDD ``JavaPairRDD<Object,
 DataRecord<?>>`` whose key only drives partitioning (reference
-``S3DirectColumnarInput.java:96``, ``JdbcColumnarInput.java:136``), with
-lineage metadata attached by ``DataStreamBuilder`` (reference
-``S3DirectColumnarInput.java:100-102``).
+``S3DirectColumnarInput.java:96``, ``JdbcColumnarInput.java:136``).
 
-Here a DataStream is a thin wrapper around a lazy ``DataFrame`` plus the same
-lineage attributes. There is no key column: partitioning intent is expressed
+Here a DataStream is a thin wrapper around a lazy ``DataFrame`` plus its name
+and record shape. There is no key column: partitioning intent is expressed
 through :meth:`DataStream.repartitioned`, which maps the reference's
 ``Partitioning`` enum onto ``DataFrame.repartition`` so Catalyst/AQE stay in
 charge of the physical plan.
@@ -15,7 +13,7 @@ charge of the physical plan.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 from enum import Enum
 
 from pyspark.sql import DataFrame
@@ -57,26 +55,13 @@ class Partitioning(Enum):
     BY_SOURCE = "BY_SOURCE"
 
 
-@dataclass(frozen=True)
-class Lineage:
-    """Creation metadata carried by every stream (reference
-    ``DataStreamBuilder(...).created(verb, path, type, partitioning)``)."""
-
-    verb: str
-    path: str
-    stream_type: StreamType
-    partitioning: Partitioning = Partitioning.SOURCE
-
-
 @dataclass
 class DataStream:
-    """A named, typed, lineage-carrying wrapper around a lazy DataFrame."""
+    """A named, typed wrapper around a lazy DataFrame."""
 
     name: str
     df: DataFrame
     stream_type: StreamType = StreamType.COLUMNAR
-    lineage: Lineage | None = None
-    params: dict = field(default_factory=dict)
 
     @property
     def columns(self) -> list[str]:

@@ -1,12 +1,12 @@
 """CLI mirroring the reference's options (``dist/Configuration.java:29-37``):
 
   -c conf  config file/URI        -d dir   direction to run
-  -t tmp   tmp location           -l       local mode
   -m mem   driver memory          -u ui    enable Spark UI
   -L n     local cores
 
 Unknown options are ignored (the reference parses leniently,
-``Configuration.java:68-76``).
+``Configuration.java:68-76``), so reference command lines that still pass
+its ``-t tmp`` / ``-l`` (local mode) options run unchanged.
 """
 
 from __future__ import annotations
@@ -26,8 +26,6 @@ def make_parser() -> argparse.ArgumentParser:
                         "example configs) and exit — reference DocGen parity")
     p.add_argument("-c", "--config", default=None, help="config JSON path/URI")
     p.add_argument("-d", "--direction", default=None, help="direction name")
-    p.add_argument("-t", "--tmp", default=None, help="tmp location")
-    p.add_argument("-l", "--local", action="store_true", help="local mode")
     p.add_argument("-m", "--memory", default=None, help="driver memory")
     p.add_argument("-u", "--ui", action="store_true", help="enable Spark UI")
     p.add_argument("-L", "--local-cores", type=int, default=None)

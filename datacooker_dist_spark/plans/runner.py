@@ -1,11 +1,11 @@
 """Copy-direction runner (reference ``Main.java:107-148``).
 
-Per task: resolve the input adapter by verb → load into named sub-streams →
-for each sub-stream, resolve the output adapter, rewrite the sub-name under
-the dest name, save. Unlike the reference's eager pair-RDD relay, every
-stream here is a lazy DataFrame: source → (projection, repartitioning) →
-sink is one Catalyst plan per sub-stream, so scan pruning and
-pushdown reach the source even though the config is imperative.
+Per task: resolve and configure the input and output adapters by verb →
+load into named sub-streams → for each sub-stream, rewrite the sub-name
+under the dest name and save. Unlike the reference's eager pair-RDD relay,
+every stream here is a lazy DataFrame: source → (projection,
+repartitioning) → sink is one Catalyst plan per sub-stream, so scan pruning
+and pushdown reach the source even though the config is imperative.
 """
 
 from __future__ import annotations
@@ -17,31 +17,27 @@ from ..registry import resolve_input, resolve_output
 from .config import Configuration, DistTask
 
 
-def run_task(spark: SparkSession, task: DistTask) -> dict[str, int]:
-    """Execute one copy task; returns {sub-stream name: row count written}
-    (counts come from the sink-side metrics, not an extra action)."""
+def run_task(spark: SparkSession, task: DistTask) -> list[str]:
+    """Execute one copy task; returns the dest names saved, in load order."""
     src, dst = task.source, task.dest
-    in_cls = resolve_input(src.adapter)
-    inp = in_cls().configure(src.params).initialize(spark, src.path)
+    inp = resolve_input(src.adapter)().configure(src.params).initialize(spark, src.path)
+    outp = resolve_output(dst.adapter)().configure(dst.params).initialize(spark, dst.path)
     streams = inp.load(
         src.name or "source", src.part_count, Partitioning[src.partitioning]
     )
-
-    written: dict[str, int] = {}
+    saved = []
     for sub_name, stream in streams.items():
-        out_cls = resolve_output(dst.adapter)
-        outp = out_cls().configure(dst.params).initialize(spark, dst.path)
         # dest naming: "src/sub" → "dest/sub" (reference Main.java:139-145)
         if "/" in sub_name:
             dest_name = f"{dst.name or 'dest'}/{sub_name.split('/', 1)[1]}"
         else:
             dest_name = dst.name or sub_name
         outp.save(dest_name, stream)
-        written[dest_name] = -1  # lazy sinks don't re-count; -1 = not measured
-    return written
+        saved.append(dest_name)
+    return saved
 
 
 def run(
     spark: SparkSession, config: Configuration, direction: str | None = None
-) -> list[dict[str, int]]:
+) -> list[list[str]]:
     return [run_task(spark, t) for t in config.direction(direction)]

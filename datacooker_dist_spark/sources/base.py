@@ -18,6 +18,11 @@ from pyspark.sql import SparkSession
 from ..model import DataStream, Partitioning
 from ..registry import Param
 
+_BOOL_WORDS = {
+    "1": True, "true": True, "yes": True,
+    "0": False, "false": False, "no": False,
+}
+
 
 class Adapter(ABC):
     verb: str = ""
@@ -36,8 +41,10 @@ class Adapter(ABC):
 
         Mirrors the reference's typed-param contract: an unknown name is an
         error (never a silent no-op), a missing required param is an error,
-        and declared defaults are filled in (reference
-        ``DocGen.java:68-76`` renders the same descriptors to docs)."""
+        declared defaults fill absent or null params (reference
+        ``DocGen.java:68-76`` renders the same descriptors to docs), and
+        ``bool`` params are coerced once, here, so adapters read real
+        bools."""
         supplied = dict(params or {})
         declared = {p.name: p for p in self.PARAMS}
         if declared:
@@ -57,10 +64,24 @@ class Adapter(ABC):
                     f"'{self.verb}'"
                 )
             for p in self.PARAMS:
-                if p.default is not None and p.name not in supplied:
-                    supplied[p.name] = p.default
+                if supplied.get(p.name) is None:
+                    if p.default is not None:
+                        supplied[p.name] = p.default
+                elif p.type == "bool":
+                    supplied[p.name] = self._bool(p.name, supplied[p.name])
         self.params = supplied
         return self
+
+    def _bool(self, name: str, value) -> bool:
+        if isinstance(value, bool):
+            return value
+        word = str(value).strip().lower()
+        if word in _BOOL_WORDS:
+            return _BOOL_WORDS[word]
+        raise ValueError(
+            f"Param '{name}' of adapter '{self.verb}' must be a bool "
+            f"(true/false, yes/no, 1/0), got {value!r}"
+        )
 
     def initialize(self, spark: SparkSession, path: str) -> "Adapter":
         self.spark = spark

@@ -1,9 +1,20 @@
 """Hadoop-filesystem storage adapters (reference A2-A5, A7-A19).
 
-One columnar adapter covers delimited text AND parquet (the reference
-dispatches on the ``.parquet`` filename suffix — ``S3DirectColumnarInput
-Function.java:60-76``); a text adapter covers line streams. All of the
-reference's hand-rolled mechanics map onto Spark's file sources:
+Every ``hadoop*``/``s3direct*`` verb runs through one load path and one save
+path; a format contributes only what differs.
+
+- ``_HadoopInputBase.load`` resolves the URI, splits first-level
+  subdirectories into sub-streams when ``sub_dirs`` is set (A15), asks the
+  format's ``_read(uri)`` for the raw reader, then applies ``columns``
+  (select + reorder with ``_`` skips, A10/A11) and only after that
+  ``part_count`` + partitioning (A13/A14) — so HASHCODE hashes the kept
+  columns only.
+- ``_HadoopOutputBase.save`` projects ``columns``, lets the format's
+  ``_frame(df)`` reshape the frame and add writer options, then writes
+  ``mode("overwrite").format(FORMAT)`` with the codec (A18) and any
+  ``partition_by``, under the write-scoped ``content_type`` conf.
+
+The reference's hand-rolled mechanics map onto Spark's file sources:
 
 - whole-file grouping / non-splittable gzip (A16/A17) → file-source
   partitioning + built-in codec detection
@@ -12,14 +23,14 @@ reference's hand-rolled mechanics map onto Spark's file sources:
 - schema-from-header (A12) → ``header`` option
 - declared loose schema with ``_`` skips (§1.3.2) → all-string StructType +
   drop
-- column select/reorder (A10/A11) → ``select``
-- ``part_count`` + HASHCODE/RANDOM (A13/A14) → ``DataStream.repartitioned``
-- ``sub_dirs`` stream split (A15) → one read per first-level subdirectory
 
-The reference's ``s3d://`` direct-S3 scheme is an s3a URI here: the adapters
-rewrite the scheme and push credentials/endpoint params into the Hadoop conf
-(``fs.s3a.*``), which is the idiomatic-Spark replacement for its hand-held
-AWS SDK client (``S3DirectStorage.java``-family).
+One columnar adapter covers delimited text AND parquet (the reference
+dispatches on the ``.parquet`` filename suffix — ``S3DirectColumnarInput
+Function.java:60-76``). The reference's ``s3d://`` direct-S3 scheme is an s3a
+URI here: the adapters rewrite the scheme and push credentials/endpoint
+params into the Hadoop conf (``fs.s3a.*``), which is the idiomatic-Spark
+replacement for its hand-held AWS SDK client (``S3DirectStorage.java``-family).
+The ``s3direct*`` verbs are empty subclasses of their ``hadoop*`` adapters.
 """
 
 from __future__ import annotations
@@ -27,13 +38,15 @@ from __future__ import annotations
 import posixpath
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..model import DataStream, Lineage, Partitioning, StreamType
+from ..model import DataStream, Partitioning, StreamType
 from ..registry import Param, input_adapter, output_adapter
 from .base import InputAdapter, OutputAdapter
 
 DEFAULT_DELIMITER = "\t"  # reference default (S3DirectColumnarInput.java:60-61)
+PARSE_MODES = ("PERMISSIVE", "DROPMALFORMED", "FAILFAST")
 
 # Every hadoop-family adapter accepts the s3d:// credential params
 # (reference ``S3DirectStorage`` metas, pushed to fs.s3a.* in resolve_uri).
@@ -47,6 +60,10 @@ COLUMNS_PARAM = Param(
     "columns", "list[str]",
     doc="column select + reorder; '_' skips a physical column (A10/A11)",
 )
+SUB_DIRS_PARAM = Param(
+    "sub_dirs", "bool",
+    doc="split first-level subdirectories into sub-streams (A15)",
+)
 CODEC_PARAM = Param(
     "codec", "str", default="none",
     doc="compression codec on write: none/gzip/snappy/zstd/... (A18)",
@@ -59,14 +76,9 @@ CONTENT_TYPE_PARAM = Param(
         "for s3a/s3d targets (requires hadoop-aws >= 3.4 at deploy time); "
         "a documented no-op on filesystems without object metadata",
 )
-
-
-def _bool(v, default=False) -> bool:
-    if v is None:
-        return default
-    if isinstance(v, bool):
-        return v
-    return str(v).lower() in ("1", "true", "yes")
+PARTITION_BY_PARAM = Param(
+    "partition_by", "list[str]", doc="hive-style partition columns on write",
+)
 
 
 def resolve_uri(path: str, params: dict, spark) -> str:
@@ -105,31 +117,36 @@ def list_subdirs(spark, uri: str) -> list[str]:
 
 
 class _HadoopInputBase(InputAdapter):
+    stream_type = StreamType.COLUMNAR
+
     def load(self, name, part_count=None, partitioning=Partitioning.HASHCODE):
         uri = resolve_uri(self.path, self.params, self.spark)
-        if _bool(self.params.get("sub_dirs")):
-            subs = list_subdirs(self.spark, uri)
-            out: dict[str, DataStream] = {}
-            for sub in subs:
-                df = self._read(posixpath.join(uri, sub))
-                out[f"{name}/{sub}"] = self._stream(
-                    f"{name}/{sub}", df, uri, part_count, partitioning
-                )
-            return out
-        return {name: self._stream(name, self._read(uri), uri, part_count, partitioning)}
-
-    def _stream(self, name, df, uri, part_count, partitioning) -> DataStream:
-        ds = DataStream(
-            name=name,
-            df=df,
-            stream_type=self.stream_type,
-            lineage=Lineage(self.verb, uri, self.stream_type, partitioning),
-            params=self.params,
-        )
-        return ds.repartitioned(part_count, partitioning)
+        if self.params.get("sub_dirs"):
+            uris = {
+                f"{name}/{sub}": posixpath.join(uri, sub)
+                for sub in list_subdirs(self.spark, uri)
+            }
+        else:
+            uris = {name: uri}
+        # Project before repartitioning: HASHCODE hashes the kept columns only.
+        return {
+            n: DataStream(n, self._read(u), self.stream_type)
+            .select_columns(self.params.get("columns"))
+            .repartitioned(part_count, partitioning)
+            for n, u in uris.items()
+        }
 
     def _read(self, uri: str) -> DataFrame:
+        """The format's raw reader for one directory or file."""
         raise NotImplementedError
+
+    def _parse_mode(self) -> str:
+        mode = str(self.params["parse_mode"]).upper()
+        if mode not in PARSE_MODES:
+            raise ValueError(
+                f"Unknown parse_mode '{mode}'; expected {'/'.join(PARSE_MODES)}"
+            )
+        return mode
 
 
 @input_adapter("hadoopColumnar")
@@ -142,7 +159,6 @@ class HadoopColumnarInput(_HadoopInputBase):
     (select + reorder), ``sub_dirs``.
     """
 
-    stream_type = StreamType.COLUMNAR
     PARAMS = S3_PARAMS + (
         COLUMNS_PARAM,
         Param("delimiter", "str", default=DEFAULT_DELIMITER,
@@ -154,8 +170,7 @@ class HadoopColumnarInput(_HadoopInputBase):
                   "'_' positions drop the physical column"),
         Param("parquet", "bool",
               doc="force the parquet branch regardless of path suffix (A3)"),
-        Param("sub_dirs", "bool",
-              doc="split first-level subdirectories into sub-streams (A15)"),
+        SUB_DIRS_PARAM,
         Param("parse_mode", "str", default="PERMISSIVE",
               doc="malformed-row policy for delimited text: PERMISSIVE "
                   "(null-fill, keep raw line in _corrupt_record), "
@@ -165,42 +180,26 @@ class HadoopColumnarInput(_HadoopInputBase):
     )
 
     def _read(self, uri: str) -> DataFrame:
-        if uri.rstrip("/").endswith(".parquet") or _bool(self.params.get("parquet")):
-            df = self.spark.read.parquet(uri)
-        else:
-            delimiter = self.params.get("delimiter", DEFAULT_DELIMITER)
-            mode = str(self.params.get("parse_mode", "PERMISSIVE")).upper()
-            if mode not in ("PERMISSIVE", "DROPMALFORMED", "FAILFAST"):
-                raise ValueError(
-                    f"Unknown parse_mode '{mode}'; expected "
-                    "PERMISSIVE/DROPMALFORMED/FAILFAST"
-                )
-            schema_from_file = _bool(self.params.get("schema_from_file"), default=True)
-            if schema_from_file:
-                df = self.spark.read.options(
-                    header=True, sep=delimiter, mode=mode
-                ).csv(uri)
-            else:
-                declared = self.params.get("schema_default")
-                if not declared:
-                    raise ValueError(
-                        "schema_default is required when schema_from_file=false "
-                        "(reference S3DirectColumnarInput.java:56-59)"
-                    )
-                # Loose schema: names only, everything string, `_` positions
-                # are placeholders for physical columns to drop.
-                names = [
-                    c if c != "_" else f"__skip_{i}" for i, c in enumerate(declared)
-                ]
-                schema = StructType([StructField(n, StringType()) for n in names])
-                df = self.spark.read.options(
-                    header=False, sep=delimiter, mode=mode
-                ).schema(schema).csv(uri)
-                df = df.drop(*[n for n in names if n.startswith("__skip_")])
-        columns = self.params.get("columns")
-        if columns:
-            df = df.select(*[c for c in columns if c != "_"])
-        return df
+        if uri.rstrip("/").endswith(".parquet") or self.params.get("parquet"):
+            return self.spark.read.parquet(uri)
+        r = self.spark.read.options(
+            sep=self.params["delimiter"],
+            mode=self._parse_mode(),
+        )
+        if self.params["schema_from_file"]:
+            return r.options(header=True).csv(uri)
+        declared = self.params.get("schema_default")
+        if not declared:
+            raise ValueError(
+                "schema_default is required when schema_from_file=false "
+                "(reference S3DirectColumnarInput.java:56-59)"
+            )
+        # Loose schema: names only, everything string, `_` positions are
+        # placeholders for physical columns to drop.
+        names = [c if c != "_" else f"__skip_{i}" for i, c in enumerate(declared)]
+        schema = StructType([StructField(n, StringType()) for n in names])
+        df = r.options(header=False).schema(schema).csv(uri)
+        return df.drop(*[n for n in names if n.startswith("__skip_")])
 
 
 @input_adapter("hadoopText")
@@ -208,10 +207,7 @@ class HadoopTextInput(_HadoopInputBase):
     """Line stream → single ``value: string`` column (reference A4)."""
 
     stream_type = StreamType.PLAIN_TEXT
-    PARAMS = S3_PARAMS + (
-        Param("sub_dirs", "bool",
-              doc="split first-level subdirectories into sub-streams (A15)"),
-    )
+    PARAMS = S3_PARAMS + (SUB_DIRS_PARAM,)
 
     def _read(self, uri: str) -> DataFrame:
         return self.spark.read.text(uri)
@@ -230,29 +226,17 @@ class HadoopStructuredInput(_HadoopInputBase):
         COLUMNS_PARAM,
         Param("schema_json", "str",
               doc="explicit DDL schema; omitted → Spark samples to infer"),
-        Param("sub_dirs", "bool",
-              doc="split first-level subdirectories into sub-streams (A15)"),
+        SUB_DIRS_PARAM,
         Param("parse_mode", "str", default="PERMISSIVE",
               doc="malformed-record policy: PERMISSIVE (null-fill), "
                   "DROPMALFORMED, or FAILFAST"),
     )
 
     def _read(self, uri: str) -> DataFrame:
-        mode = str(self.params.get("parse_mode", "PERMISSIVE")).upper()
-        if mode not in ("PERMISSIVE", "DROPMALFORMED", "FAILFAST"):
-            raise ValueError(
-                f"Unknown parse_mode '{mode}'; expected "
-                "PERMISSIVE/DROPMALFORMED/FAILFAST"
-            )
-        r = self.spark.read.option("mode", mode)
-        ddl = self.params.get("schema_json")
-        if ddl:
-            r = r.schema(ddl)
-        df = r.json(uri)
-        columns = self.params.get("columns")
-        if columns:
-            df = df.select(*[c for c in columns if c != "_"])
-        return df
+        r = self.spark.read.option("mode", self._parse_mode())
+        if self.params.get("schema_json"):
+            r = r.schema(self.params["schema_json"])
+        return r.json(uri)
 
 
 @input_adapter("hadoopOrc")
@@ -262,49 +246,110 @@ class HadoopOrcInput(_HadoopInputBase):
     ORC is the other self-describing columnar lake format Spark reads
     vectorized with predicate pushdown; ``columns`` selects/reorders."""
 
-    stream_type = StreamType.COLUMNAR
+    PARAMS = S3_PARAMS + (COLUMNS_PARAM, SUB_DIRS_PARAM)
+
+    def _read(self, uri: str) -> DataFrame:
+        return self.spark.read.orc(uri)
+
+
+@input_adapter("hadoopXml")
+class HadoopXmlInput(_HadoopInputBase):
+    """XML → columnar rows via Spark 4's native XML source (engine
+    extension; ``row_tag`` picks the repeating record element,
+    ``schema_ddl`` pins an explicit schema instead of inference)."""
+
     PARAMS = S3_PARAMS + (
         COLUMNS_PARAM,
-        Param("sub_dirs", "bool",
-              doc="split first-level subdirectories into sub-streams (A15)"),
+        Param("row_tag", "str", default="row",
+              doc="repeating record element name"),
+        Param("schema_ddl", "str",
+              doc="explicit DDL schema instead of inference"),
+        SUB_DIRS_PARAM,
     )
 
     def _read(self, uri: str) -> DataFrame:
-        df = self.spark.read.orc(uri)
-        columns = self.params.get("columns")
-        if columns:
-            df = df.select(*[c for c in columns if c != "_"])
-        return df
+        r = self.spark.read.format("xml").option("rowTag", self.params["row_tag"])
+        if self.params.get("schema_ddl"):
+            r = r.schema(self.params["schema_ddl"])
+        return r.load(uri)
 
 
-# s3direct verbs are the same adapters under the reference's registered
-# names — the s3d:// → s3a rewrite happens in resolve_uri.
-input_adapter("s3directColumnar")(HadoopColumnarInput)
-input_adapter("s3directText")(HadoopTextInput)
+@input_adapter("hadoopFixedWidth")
+class HadoopFixedWidthInput(_HadoopInputBase):
+    """Fixed-width text → columnar rows (engine extension of the A5
+    any-Hadoop-format base): the classic mainframe/ERP feed layout where
+    each field occupies a declared character span. ``widths`` and
+    ``schema_default`` must align positionally; ``_`` names skip their
+    span (A11 semantics). Values read back as trimmed strings — type
+    them downstream (the format carries no type information, exactly
+    like the reference's loose delimited schema, SURVEY §1.3). Parsing
+    is pure ``substring`` projection: narrow, codegen, no shuffle."""
+
+    PARAMS = S3_PARAMS + (
+        Param("widths", "list[int]", required=True,
+              doc="character width of each field, in order"),
+        Param("schema_default", "list[str]", required=True,
+              doc="field names, positionally matching widths; '_' skips"),
+        Param("trim", "bool", default=True,
+              doc="strip the pad characters from each value"),
+        SUB_DIRS_PARAM,
+    )
+
+    def _read(self, uri: str) -> DataFrame:
+        widths = [int(w) for w in self.params["widths"]]
+        names = list(self.params["schema_default"])
+        if len(widths) != len(names):
+            raise ValueError(
+                f"widths ({len(widths)}) and schema_default ({len(names)}) "
+                "must have the same length"
+            )
+        cols, off = [], 0
+        for name, width in zip(names, widths):
+            if name != "_":
+                c = F.substring("value", off + 1, width)
+                cols.append((F.trim(c) if self.params["trim"] else c).alias(name))
+            off += width
+        return self.spark.read.text(uri).select(*cols)
+
+
+@input_adapter("s3directColumnar")
+class S3DirectColumnarInput(HadoopColumnarInput):
+    """``hadoopColumnar`` input under the reference's s3direct verb."""
+
+
+@input_adapter("s3directText")
+class S3DirectTextInput(HadoopTextInput):
+    """``hadoopText`` input under the reference's s3direct verb."""
 
 
 _CT_KEY = "fs.s3a.create.header.Content-Type"
 
 
 class _HadoopOutputBase(OutputAdapter):
-    def __init_subclass__(cls, **kwargs):
-        # Wrap every concrete save() so the content-type conf is scoped to
-        # THE WRITE, not leaked into the session (see _apply_content_type).
-        super().__init_subclass__(**kwargs)
-        if "save" in cls.__dict__:
-            import functools
+    #: Spark writer format name.
+    FORMAT = "text"
 
-            inner = cls.__dict__["save"]
+    def save(self, name: str, stream: DataStream) -> None:
+        df, options = self._frame(stream.select_columns(self.params.get("columns")).df)
+        codec = str(self.params["codec"]).lower()
+        if codec == "none" and self.FORMAT == "parquet":
+            codec = "snappy"
+        w = (
+            df.write.mode("overwrite").format(self.FORMAT)
+            .options(compression=codec, **options)
+        )
+        if self.params.get("partition_by"):
+            w = w.partitionBy(*self.params["partition_by"])
+        cleanup = self._apply_content_type()
+        try:
+            w.save(self._target(name))
+        finally:
+            cleanup()
 
-            @functools.wraps(inner)
-            def save(self, name, stream, _inner=inner):
-                cleanup = self._apply_content_type()
-                try:
-                    return _inner(self, name, stream)
-                finally:
-                    cleanup()
-
-            cls.save = save
+    def _frame(self, df: DataFrame) -> tuple[DataFrame, dict]:
+        """Reshape the projected frame for the format; return it with any
+        extra writer options."""
+        return df, {}
 
     def _apply_content_type(self):
         """content_type (reference S3DirectTextOutput.java:34-44): S3 object
@@ -312,14 +357,12 @@ class _HadoopOutputBase(OutputAdapter):
         headers from conf keys under the documented `fs.s3a.create.header.`
         prefix (hadoop-aws index.md "Custom S3 headers") — every object the
         writers create then carries the header on its multipart upload,
-        which is where the reference sets its content type. (The previous
-        `fs.s3a.object.content.type` key was not a real Hadoop property —
-        a silent no-op, VERDICT r02 task 5.) The key is session-global
-        Hadoop conf, so it is set only for the duration of this adapter's
-        save() and the prior value restored after — otherwise one output's
-        content type would contaminate every later s3a write in the
-        session. (Copy-runner tasks execute serially, like the
-        reference's Main loop; concurrent multi-threaded writes with
+        which is where the reference sets its content type. The key is
+        session-global Hadoop conf, so :meth:`save` sets it only for the
+        duration of the write and restores the prior value after —
+        otherwise one output's content type would contaminate every later
+        s3a write in the session. (Copy-runner tasks execute serially, like
+        the reference's Main loop; concurrent multi-threaded writes with
         DIFFERENT content types would race on the shared conf — inherent
         to the Hadoop-conf mechanism.) On file:// and hdfs:// there is no
         object metadata to set — accepted, documented no-op. Requires
@@ -346,9 +389,6 @@ class _HadoopOutputBase(OutputAdapter):
         sub = name.split("/", 1)[1] if "/" in name else None
         return posixpath.join(uri, sub) if sub else uri
 
-    def _projected(self, stream: DataStream) -> DataFrame:
-        return stream.select_columns(self.params.get("columns")).df
-
 
 @output_adapter("hadoopColumnar")
 class HadoopColumnarOutput(_HadoopOutputBase):
@@ -366,20 +406,14 @@ class HadoopColumnarOutput(_HadoopOutputBase):
               doc="field delimiter for the csv branch"),
     )
 
-    def save(self, name: str, stream: DataStream) -> None:
-        df = self._projected(stream)
-        codec = str(self.params.get("codec", "none")).lower()
-        if str(self.params.get("format", "csv")).lower() == "parquet":
-            df.write.mode("overwrite").option(
-                "compression", codec if codec != "none" else "snappy"
-            ).parquet(self._target(name))
-            return
-        delimiter = self.params.get("delimiter", DEFAULT_DELIMITER)
-        (
-            df.write.mode("overwrite")
-            .options(header=True, sep=delimiter, compression=codec)
-            .csv(self._target(name))
-        )
+    @property
+    def FORMAT(self) -> str:
+        return "parquet" if str(self.params["format"]).lower() == "parquet" else "csv"
+
+    def _frame(self, df):
+        if self.FORMAT == "parquet":
+            return df, {}
+        return df, {"header": True, "sep": self.params["delimiter"]}
 
 
 @output_adapter("hadoopParquet")
@@ -389,24 +423,14 @@ class HadoopParquetOutput(_HadoopOutputBase):
     partition values prune at scan time, the organizing principle for
     time/tenant-partitioned 100 TB lakes)."""
 
+    FORMAT = "parquet"
     PARAMS = S3_PARAMS + (
         COLUMNS_PARAM,
         CONTENT_TYPE_PARAM,
         Param("codec", "str", default="snappy",
               doc="parquet compression codec (none → snappy)"),
-        Param("partition_by", "list[str]",
-              doc="hive-style partition columns on write"),
+        PARTITION_BY_PARAM,
     )
-
-    def save(self, name: str, stream: DataStream) -> None:
-        codec = str(self.params.get("codec", "snappy")).lower()
-        w = self._projected(stream).write.mode("overwrite").option(
-            "compression", "snappy" if codec == "none" else codec
-        )
-        partition_by = self.params.get("partition_by")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._target(name))
 
 
 @output_adapter("hadoopText")
@@ -421,20 +445,15 @@ class HadoopTextOutput(_HadoopOutputBase):
               doc="join delimiter when the stream has >1 column"),
     )
 
-    def save(self, name: str, stream: DataStream) -> None:
-        df = self._projected(stream)
+    def _frame(self, df):
         if len(df.columns) > 1:
-            from pyspark.sql import functions as F
-
-            delimiter = self.params.get("delimiter", DEFAULT_DELIMITER)
             df = df.select(
-                F.concat_ws(delimiter, *[F.col(c).cast("string") for c in df.columns])
-                .alias("value")
+                F.concat_ws(
+                    self.params["delimiter"],
+                    *[F.col(c).cast("string") for c in df.columns],
+                ).alias("value")
             )
-        codec = str(self.params.get("codec", "none")).lower()
-        df.write.mode("overwrite").option("compression", codec).text(
-            self._target(name)
-        )
+        return df, {}
 
 
 @output_adapter("hadoopStructured")
@@ -444,44 +463,8 @@ class HadoopStructuredOutput(_HadoopOutputBase):
     but dist never shipped a JSON sink — engine extension). Nested
     struct/array/map columns serialize natively."""
 
+    FORMAT = "json"
     PARAMS = S3_PARAMS + (COLUMNS_PARAM, CODEC_PARAM, CONTENT_TYPE_PARAM)
-
-    def save(self, name: str, stream: DataStream) -> None:
-        codec = str(self.params.get("codec", "none")).lower()
-        self._projected(stream).write.mode("overwrite").option(
-            "compression", codec
-        ).json(self._target(name))
-
-
-@input_adapter("hadoopXml")
-class HadoopXmlInput(_HadoopInputBase):
-    """XML → columnar rows via Spark 4's native XML source (engine
-    extension; ``row_tag`` picks the repeating record element,
-    ``schema_ddl`` pins an explicit schema instead of inference)."""
-
-    stream_type = StreamType.COLUMNAR
-    PARAMS = S3_PARAMS + (
-        COLUMNS_PARAM,
-        Param("row_tag", "str", default="row",
-              doc="repeating record element name"),
-        Param("schema_ddl", "str",
-              doc="explicit DDL schema instead of inference"),
-        Param("sub_dirs", "bool",
-              doc="split first-level subdirectories into sub-streams (A15)"),
-    )
-
-    def _read(self, uri: str) -> DataFrame:
-        r = self.spark.read.format("xml").option(
-            "rowTag", self.params.get("row_tag", "row")
-        )
-        ddl = self.params.get("schema_ddl")
-        if ddl:
-            r = r.schema(ddl)
-        df = r.load(uri)
-        columns = self.params.get("columns")
-        if columns:
-            df = df.select(*[c for c in columns if c != "_"])
-        return df
 
 
 @output_adapter("hadoopOrc")
@@ -490,23 +473,13 @@ class HadoopOrcOutput(_HadoopOutputBase):
     hive-style ``partition_by`` — mirrors the parquet sink for the other
     columnar lake format."""
 
+    FORMAT = "orc"
     PARAMS = S3_PARAMS + (
         COLUMNS_PARAM,
         CONTENT_TYPE_PARAM,
         Param("codec", "str", default="snappy", doc="ORC compression codec"),
-        Param("partition_by", "list[str]",
-              doc="hive-style partition columns on write"),
+        PARTITION_BY_PARAM,
     )
-
-    def save(self, name: str, stream: DataStream) -> None:
-        codec = str(self.params.get("codec", "snappy")).lower()
-        w = self._projected(stream).write.mode("overwrite").option(
-            "compression", codec
-        )
-        partition_by = self.params.get("partition_by")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.orc(self._target(name))
 
 
 @output_adapter("hadoopXml")
@@ -514,6 +487,7 @@ class HadoopXmlOutput(_HadoopOutputBase):
     """Columnar → XML documents (``row_tag``/``root_tag`` name the
     elements; codec compresses whole files, XML is not splittable)."""
 
+    FORMAT = "xml"
     PARAMS = S3_PARAMS + (
         COLUMNS_PARAM,
         CODEC_PARAM,
@@ -522,62 +496,8 @@ class HadoopXmlOutput(_HadoopOutputBase):
         Param("root_tag", "str", default="rows", doc="root element name"),
     )
 
-    def save(self, name: str, stream: DataStream) -> None:
-        codec = str(self.params.get("codec", "none")).lower()
-        (
-            self._projected(stream)
-            .write.mode("overwrite")
-            .format("xml")
-            .option("rowTag", self.params.get("row_tag", "row"))
-            .option("rootTag", self.params.get("root_tag", "rows"))
-            .option("compression", codec)
-            .save(self._target(name))
-        )
-
-
-@input_adapter("hadoopFixedWidth")
-class HadoopFixedWidthInput(_HadoopInputBase):
-    """Fixed-width text → columnar rows (engine extension of the A5
-    any-Hadoop-format base): the classic mainframe/ERP feed layout where
-    each field occupies a declared character span. ``widths`` and
-    ``schema_default`` must align positionally; ``_`` names skip their
-    span (A11 semantics). Values read back as trimmed strings — type
-    them downstream (the format carries no type information, exactly
-    like the reference's loose delimited schema, SURVEY §1.3). Parsing
-    is pure ``substring`` projection: narrow, codegen, no shuffle."""
-
-    stream_type = StreamType.COLUMNAR
-    PARAMS = S3_PARAMS + (
-        Param("widths", "list[int]", required=True,
-              doc="character width of each field, in order"),
-        Param("schema_default", "list[str]", required=True,
-              doc="field names, positionally matching widths; '_' skips"),
-        Param("trim", "bool", default=True,
-              doc="strip the pad characters from each value"),
-        Param("sub_dirs", "bool",
-              doc="split first-level subdirectories into sub-streams (A15)"),
-    )
-
-    def _read(self, uri: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        widths = [int(w) for w in self.params["widths"]]
-        names = list(self.params["schema_default"])
-        if len(widths) != len(names):
-            raise ValueError(
-                f"widths ({len(widths)}) and schema_default ({len(names)}) "
-                "must have the same length"
-            )
-        raw = self.spark.read.text(uri)
-        cols, off = [], 0
-        for name, width in zip(names, widths):
-            if name != "_":
-                c = F.substring("value", off + 1, width)
-                if self.params.get("trim", True):
-                    c = F.trim(c)
-                cols.append(c.alias(name))
-            off += width
-        return raw.select(*cols)
+    def _frame(self, df):
+        return df, {"rowTag": self.params["row_tag"], "rootTag": self.params["root_tag"]}
 
 
 @output_adapter("hadoopFixedWidth")
@@ -597,10 +517,7 @@ class HadoopFixedWidthOutput(_HadoopOutputBase):
               doc="silently truncate overlong values instead of failing"),
     )
 
-    def save(self, name: str, stream: DataStream) -> None:
-        from pyspark.sql import functions as F
-
-        df = self._projected(stream)
+    def _frame(self, df):
         widths = [int(w) for w in self.params["widths"]]
         if len(widths) != len(df.columns):
             raise ValueError(
@@ -610,31 +527,23 @@ class HadoopFixedWidthOutput(_HadoopOutputBase):
         parts = []
         for col, width in zip(df.columns, widths):
             sc = F.col(col).cast("string")
-            if self.params.get("truncate", False):
-                parts.append(F.rpad(sc, width, " "))
-            else:
+            padded = F.rpad(sc, width, " ")
+            if not self.params["truncate"]:
                 # raise_error on overflow: a too-wide value shifting every
                 # later field is the classic fixed-width corruption.
-                parts.append(
-                    F.when(
-                        F.length(sc) > width,
-                        F.raise_error(
-                            F.concat(
-                                F.lit(
-                                    f"fixed-width overflow in '{col}' "
-                                    f"(width {width}): "
-                                ),
-                                sc,
-                            )
-                        ),
-                    ).otherwise(F.rpad(sc, width, " "))
+                overflow = F.concat(
+                    F.lit(f"fixed-width overflow in '{col}' (width {width}): "), sc
                 )
-        out = df.select(F.concat(*parts).alias("value"))
-        codec = str(self.params.get("codec", "none")).lower()
-        out.write.mode("overwrite").option("compression", codec).text(
-            self._target(name)
-        )
+                padded = F.when(F.length(sc) > width, F.raise_error(overflow)).otherwise(padded)
+            parts.append(padded)
+        return df.select(F.concat(*parts).alias("value")), {}
 
 
-output_adapter("s3directText")(HadoopColumnarOutput)
-output_adapter("s3directParquet")(HadoopParquetOutput)
+@output_adapter("s3directText")
+class S3DirectTextOutput(HadoopColumnarOutput):
+    """``hadoopColumnar`` output under the reference's s3direct verb."""
+
+
+@output_adapter("s3directParquet")
+class S3DirectParquetOutput(HadoopParquetOutput):
+    """``hadoopParquet`` output under the reference's s3direct verb."""

@@ -15,7 +15,7 @@ tests exercise option-plumbing and registry wiring; a deployment provides
 
 from __future__ import annotations
 
-from ..model import DataStream, Lineage, Partitioning, StreamType
+from ..model import DataStream, Partitioning, StreamType
 from ..registry import Param, input_adapter, output_adapter
 from .base import InputAdapter, OutputAdapter
 
@@ -157,13 +157,7 @@ class JdbcColumnarInput(InputAdapter):
             df = self._load_placeholder_query(int(part_count or 0))
         else:
             df = self.reader(part_count).load()
-        ds = DataStream(
-            name=name,
-            df=df,
-            stream_type=StreamType.COLUMNAR,
-            lineage=Lineage(self.verb, self.path, StreamType.COLUMNAR, partitioning),
-            params=self.params,
-        )
+        ds = DataStream(name, df, StreamType.COLUMNAR)
         # Reference JDBC supports only HASHCODE/RANDOM (JdbcColumnarInput.java:39-40).
         # Placeholder queries are already partitioned by their binds — the
         # reference keys records for shuffle placement but never moves them

@@ -588,3 +588,81 @@ def test_adapter_docs_are_fresh():
     with open(path) as fh:
         on_disk = fh.read()
     assert on_disk.strip() == adapter_docs().strip()
+
+
+def test_alias_verbs_keep_their_own_names():
+    """The s3direct verbs are separate registrations: a typo in a
+    hadoopColumnar config is reported against hadoopColumnar, not the
+    alias registered after it."""
+    with pytest.raises(ValueError, match="adapter 'hadoopColumnar'"):
+        resolve_input("hadoopColumnar")().configure({"bogus": 1})
+    for verb in ("s3directColumnar", "s3directText"):
+        assert resolve_input(verb).verb == verb
+    for verb in ("s3directText", "s3directParquet"):
+        assert resolve_output(verb).verb == verb
+
+
+def test_fixedwidth_truncate_false_string_raises(spark, tmp_path):
+    """`truncate: "false"` from a JSON/string config is a real False: an
+    overlong value still fails the write instead of being cut."""
+    from datacooker_dist_spark.model import DataStream, StreamType
+
+    df = spark.createDataFrame([("toolongvalue", 1)], "a string, b int")
+    out = resolve_output("hadoopFixedWidth")().configure(
+        {"widths": [4, 4], "truncate": "false"}
+    ).initialize(spark, str(tmp_path / "fw"))
+    with pytest.raises(Exception, match="fixed-width overflow"):
+        out.save("t", DataStream("t", df, StreamType.COLUMNAR))
+
+
+def test_fixedwidth_trim_false_string_keeps_padding(spark, tmp_path):
+    p = tmp_path / "fwin"
+    p.mkdir()
+    (p / "d.txt").write_text("ab  cd  \n")
+    [ds] = load_one(
+        spark, "hadoopFixedWidth", str(p),
+        params={"widths": [4, 4], "schema_default": ["a", "b"], "trim": "false"},
+    ).values()
+    assert [tuple(r) for r in ds.df.collect()] == [("ab  ", "cd  ")]
+
+
+def test_bool_param_rejects_non_bool_word():
+    with pytest.raises(ValueError, match="'sub_dirs' of adapter 'hadoopText'"):
+        resolve_input("hadoopText")().configure({"sub_dirs": "maybe"})
+
+
+def test_cli_ignores_reference_tmp_and_local_options():
+    from datacooker_dist_spark.plans.cli import make_parser
+
+    args, _unknown = make_parser().parse_known_args(
+        ["-l", "-t", "/x", "-c", "c.json", "-d", "d"]
+    )
+    assert (args.config, args.direction) == ("c.json", "d")
+
+
+def test_projection_precedes_hashcode_repartition(spark, tmp_path):
+    """The copy-job load shape (gzip TSV sub-dirs, `_`-skip columns,
+    HASHCODE part_count) hashes exactly the kept columns: the projection
+    is applied before the repartition."""
+    import re
+
+    rows_ = spark.createDataFrame(
+        [(i, f"u{i}", f"t{i}", f"n{i}") for i in range(20)],
+        "id int, user string, ts string, note string",
+    )
+    base = str(tmp_path / "copy_src")
+    for year in ("2021", "2022"):
+        rows_.coalesce(1).write.options(
+            header=True, sep="\t", compression="gzip"
+        ).csv(f"{base}/{year}")
+    streams = load_one(
+        spark, "hadoopColumnar", base,
+        params={"sub_dirs": True, "columns": ["id", "_", "note", "user"]},
+        part_count=3,
+    )
+    assert sorted(streams) == ["t/2021", "t/2022"]
+    for ds in streams.values():
+        plan = ds.df._jdf.queryExecution().optimizedPlan().toString()
+        [key] = re.findall(r"RepartitionByExpression \[xxhash64\(([^)]*)\)\], 3", plan)
+        hashed = [re.sub(r"#\d+L?$", "", c) for c in key.split(", ")[:-1]]
+        assert hashed == ["id", "note", "user"]
