@@ -132,11 +132,11 @@ def _memo_clusters(names: list[str]) -> dict[str, str]:
     is billed to its named build query.
 
     Edges count ONLY for names that resolve to a MODULE-LEVEL
-    ``shared_*`` function whose body touches a ``*_CACHE`` memo dict
-    (ADVICE r06): a local variable, helper parameter, or non-memoized
-    helper that merely starts with ``shared_`` can no longer forge a
-    cluster edge and silently merge unrelated clusters (which would
-    move chunk boundaries and retime exemptions)."""
+    ``shared_*`` function decorated with ``memo`` (ADVICE r06): a local
+    variable, helper parameter, or non-memoized helper that merely
+    starts with ``shared_`` can no longer forge a cluster edge and
+    silently merge unrelated clusters (which would move chunk
+    boundaries and retime exemptions)."""
     import ast
     import glob
 
@@ -174,28 +174,21 @@ def _memo_clusters(names: list[str]) -> dict[str, str]:
             continue
 
     # Pass 1 — the memo registry (ADVICE r06): a name is a memo edge
-    # target only if it is a MODULE-LEVEL ``shared_*`` def whose body
-    # reads or writes a ``*_CACHE`` identifier. Everything else that
-    # happens to start with ``shared_`` (locals, params, plain helpers)
-    # is ignored by the edge scan below.
-    memo_funcs: set[str] = set()
-    for tree in trees:
-        for node in tree.body:  # module level only
-            if not (
-                isinstance(node, ast.FunctionDef)
-                and node.name.startswith("shared_")
-            ):
-                continue
-            touches_cache = any(
-                (isinstance(n, ast.Name) and n.id.endswith("_CACHE"))
-                or (
-                    isinstance(n, ast.Attribute)
-                    and n.attr.endswith("_CACHE")
-                )
-                for n in ast.walk(node)
-            )
-            if touches_cache:
-                memo_funcs.add(node.name)
+    # target only if it is a MODULE-LEVEL ``shared_*`` def decorated
+    # with ``memo`` (``@memo`` or ``@<module>.memo``). Everything else
+    # that happens to start with ``shared_`` (locals, params, plain
+    # helpers) is ignored by the edge scan below.
+    memo_funcs: set[str] = {
+        node.name
+        for tree in trees
+        for node in tree.body  # module level only
+        if isinstance(node, ast.FunctionDef)
+        and node.name.startswith("shared_")
+        and any(
+            getattr(d, "id", getattr(d, "attr", None)) == "memo"
+            for d in node.decorator_list
+        )
+    }
 
     memo_edges: dict[str, set[str]] = {}
     query_memos: dict[str, set[str]] = {}

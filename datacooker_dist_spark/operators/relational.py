@@ -32,14 +32,6 @@ def project(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     return df.select(*[c for c in columns if c != "_"])
 
 
-# ---------------------------------------------------------------- filtering
-
-def filter_rows(df: DataFrame, predicate: Column | str) -> DataFrame:
-    """Predicate filter. Plain comparisons/IN/LIKE/BETWEEN/null-checks all
-    push down to the parquet scan (visible as PushedFilters in .explain)."""
-    return df.filter(predicate)
-
-
 # ---------------------------------------------------------------- joins
 
 def join(
@@ -160,23 +152,8 @@ def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b)
 
 
-def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b).distinct()
-
-
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
-
-
-def intersect_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Multiset INTERSECT ALL (duplicates kept up to the min of the two
-    sides' counts) — plans as one shuffle on the full row, same as
-    intersect, with per-row count bookkeeping instead of dedup."""
-    return a.intersectAll(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)
 
 
 def except_distinct(a: DataFrame, b: DataFrame) -> DataFrame:

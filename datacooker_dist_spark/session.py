@@ -81,20 +81,3 @@ def fan_out(df, parallelism: int | None = None):
     if current >= n:
         return df
     return df.repartition(n)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Read the synthetic parquet tables of a scale-factor dir as a dict."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -99,16 +99,17 @@ def resolve_uri(path: str, params: dict, spark) -> str:
     return path
 
 
-def list_subdirs(spark, uri: str) -> list[str]:
+def list_subdirs(spark, uri: str) -> list[str] | None:
     """First-level 'subdirectories' under a prefix via the Hadoop FileSystem
     API (works for file:, hdfs:, s3a: — the reference pages the S3 listing
-    by hand, ``S3DirectInput.java:56-91``)."""
+    by hand, ``S3DirectInput.java:56-91``); None when the prefix does not
+    exist."""
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(uri)
     fs = p.getFileSystem(hconf)
     if not fs.exists(p):
-        return []
+        return None
     return sorted(
         st.getPath().getName()
         for st in fs.listStatus(p)
@@ -122,10 +123,14 @@ class _HadoopInputBase(InputAdapter):
     def load(self, name, part_count=None, partitioning=Partitioning.HASHCODE):
         uri = resolve_uri(self.path, self.params, self.spark)
         if self.params.get("sub_dirs"):
-            uris = {
-                f"{name}/{sub}": posixpath.join(uri, sub)
-                for sub in list_subdirs(self.spark, uri)
-            }
+            subs = list_subdirs(self.spark, uri)
+            if not subs:
+                # A copy that finds nothing to copy must not report success.
+                why = "does not exist" if subs is None else "has no sub-directories"
+                raise FileNotFoundError(
+                    f"Input '{self.verb}' with sub_dirs: source {uri} {why}"
+                )
+            uris = {f"{name}/{sub}": posixpath.join(uri, sub) for sub in subs}
         else:
             uris = {name: uri}
         # Project before repartitioning: HASHCODE hashes the kept columns only.

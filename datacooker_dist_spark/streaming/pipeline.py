@@ -55,6 +55,33 @@ def run_available_now(
     return spark.table(name)
 
 
+def drain(stream: DataFrame, batch_fn, ckpt: str, *, alongside=()) -> list:
+    """Drain a bounded stream through ``foreachBatch(batch_fn)`` with its
+    checkpoint at ``ckpt`` and the ``availableNow`` trigger.
+
+    Each callable in ``alongside`` runs on its own thread (wrapped in
+    ``inheritable_thread_target``, so job groups carry over) while the
+    stream drains; their results come back in order once both the stream
+    and every leg are done. If the stream fails, its error is raised
+    first; a leg's error surfaces only after a successful drain."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    q = (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    with ThreadPoolExecutor(max_workers=max(len(alongside), 1)) as pool:
+        legs = [pool.submit(inheritable_thread_target(f)) for f in alongside]
+        # A failed stream raises here; leaving the block still waits for
+        # the legs, and their results (errors included) go unread.
+        q.awaitTermination()
+    return [leg.result() for leg in legs]
+
+
 def file_stream(spark: SparkSession, path: str, schema) -> DataFrame:
     """File-source stream over a parquet directory (one file per
     micro-batch). A single-file path is wrapped in a temp symlink directory

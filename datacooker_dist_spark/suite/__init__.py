@@ -7,22 +7,13 @@ same column names and values. ``__spark_entry__.py`` re-exports these.
 
 from __future__ import annotations
 
+import functools
+import inspect
 import threading
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-
-#: Serializes session-memo BUILDS across driver threads (ADVICE r11:
-#: the pooled composite builders relied on a hand-maintained sequential
-#: pre-warm because the ``*_CACHE`` dicts were unlocked — a future
-#: builder first-touching a memo inside a thread would double-build its
-#: localCheckpoint). Double-checked per getter: the fast path stays a
-#: plain dict hit; only a MISS takes the lock, re-checks, and builds.
-#: Reentrant because memo builds call other memo getters (opq → pq).
-#: Builds of DIFFERENT memos serialize too — acceptable: the pre-warm
-#: convention keeps pooled sections on warm memos, so the lock is a
-#: correctness backstop, not a hot path.
-MEMO_BUILD_LOCK = threading.RLock()
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -59,54 +50,92 @@ def session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+#: The session memo: ``(getter, session_key, *bound args) -> value``.
+_MEMO: dict = {}
+_MEMO_LOCKS: dict = {}
+_MEMO_LOCKS_GUARD = threading.Lock()
 
 
+def memo(fn):
+    """Memoize a session-scoped build ``fn(spark, ...)``.
+
+    The key is the getter, ``session_key(spark)`` and the remaining
+    arguments bound to ``fn``'s signature with defaults applied, so
+    ``g(spark, sf)`` and ``g(spark, sf, <the defaults>)`` share one
+    entry. A hit is a plain dict lookup with no lock. A miss takes a
+    lock for that key only: concurrent first touches of one key build
+    once, builds of different keys run at the same time, and a build
+    may call other memo getters (jaccard pairs -> LSH candidates ->
+    shingles). Memo builds must not form a cycle."""
+    sig = inspect.signature(fn)
+    name = f"{fn.__module__}.{fn.__qualname__}"
+
+    @functools.wraps(fn)
+    def getter(spark, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        key = (name, session_key(spark), *list(bound.arguments.values())[1:])
+        if key in _MEMO:
+            return _MEMO[key]
+        with _MEMO_LOCKS_GUARD:
+            lock = _MEMO_LOCKS.setdefault(key, threading.Lock())
+        with lock:
+            if key not in _MEMO:
+                _MEMO[key] = fn(spark, *args, **kwargs)
+        return _MEMO[key]
+
+    return getter
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value):
+    """Set the session conf ``key`` to ``value`` for the ``with`` block
+    and restore the previous value on exit, also when the block raises.
+    Only jobs that EXECUTE inside the block see the value, so wrap eager
+    work (collect, localCheckpoint, a drained stream), not a lazy plan.
+
+    Takes no lock: the conf is session-wide, so jobs another thread runs
+    meanwhile see the change too. This is the one place to make that
+    thread-safe."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@memo
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a synthetic table; the DataFrame (lazy plan root) is memoized
     per (session, path) so parquet footer/schema inference happens once per
     table instead of once per query."""
-    key = (session_key(spark), sf_dir, name)
-    if key not in _TABLE_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _TABLE_CACHE:
-                if name == "events":
-                    _TABLE_CACHE[key] = read_events(spark, sf_dir)
-                else:
-                    _TABLE_CACHE[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _TABLE_CACHE[key]
+    if name == "events":
+        return read_events(spark, sf_dir)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_SHINGLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@memo
 def shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized cached shingle rows over ``documents`` — the dedup
     family (MinHash LSH, exact Jaccard, SimHash-adjacent, clustering) all
     consume the same (doc_id, _sh) pass, so shingling + its persist happen
     once per session instead of once per query."""
-    key = (session_key(spark), sf_dir)
-    if key not in _SHINGLE_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _SHINGLE_CACHE:
-                from ..operators import dedup as D
-                from ..session import fan_out
+    from ..operators import dedup as D
+    from ..session import fan_out
 
-                # Fan the scan out first (optimization round 11, guide §2.5):
-                # the tokenize + posexplode feeding the shingle window runs
-                # BEFORE the window's exchange, i.e. single-task on the bench's
-                # one-row-group documents file. (The r03 note that an up-front
-                # repartition measured slower predates the split of tokenize
-                # cost from window cost; the A/B now shows the fan-out winning
-                # — the raw-text shuffle it adds is a few hundred KB.)
-                _SHINGLE_CACHE[key] = D.shingle_rows(
-                    fan_out(table(spark, sf_dir, "documents")),
-                    cache=True,
-                )
-    return _SHINGLE_CACHE[key]
+    # Fan the scan out first (optimization round 11, guide §2.5):
+    # the tokenize + posexplode feeding the shingle window runs
+    # BEFORE the window's exchange, i.e. single-task on the bench's
+    # one-row-group documents file. (The r03 note that an up-front
+    # repartition measured slower predates the split of tokenize
+    # cost from window cost; the A/B now shows the fan-out winning
+    # — the raw-text shuffle it adds is a few hundred KB.)
+    return D.shingle_rows(
+        fan_out(table(spark, sf_dir, "documents")),
+        cache=True,
+    )
 
-
-_LSH_CAND_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 # Stop-bucket cap for every SHIPPED LSH candidate path (VERDICT r03 task
 # 3): buckets larger than this are dropped before the self-join, bounding
@@ -122,6 +151,7 @@ _LSH_CAND_CACHE: dict[tuple[int, str], DataFrame] = {}
 LSH_MAX_BUCKET = 512
 
 
+@memo
 def shared_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized banded-MinHash LSH candidate pairs (id_a < id_b,
     64 hashes × 16 bands) over ``documents``, stop-bucket-capped at
@@ -130,25 +160,18 @@ def shared_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     can be applied as a post-filter on this one set
     (``dedup_edit_distance`` filters it to its bounded slice) instead of
     re-running the signature + bucket join per consumer."""
-    key = (session_key(spark), sf_dir)
-    if key not in _LSH_CAND_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _LSH_CAND_CACHE:
-                from ..operators import dedup as D
+    from ..operators import dedup as D
 
-                _LSH_CAND_CACHE[key] = D.minhash_lsh_candidates(
-                    table(spark, sf_dir, "documents"),
-                    num_hashes=64,
-                    bands=16,
-                    shingles=shared_shingles(spark, sf_dir),
-                    max_bucket=LSH_MAX_BUCKET,
-                ).localCheckpoint()
-    return _LSH_CAND_CACHE[key]
+    return D.minhash_lsh_candidates(
+        table(spark, sf_dir, "documents"),
+        num_hashes=64,
+        bands=16,
+        shingles=shared_shingles(spark, sf_dir),
+        max_bucket=LSH_MAX_BUCKET,
+    ).localCheckpoint()
 
 
-_JACCARD_PAIR_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@memo
 def shared_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized VERIFIED near-dup pairs over ``documents``:
     banded-MinHash LSH candidates → exact 3-gram Jaccard ≥ 0.8, i.e.
@@ -157,20 +180,15 @@ def shared_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, so it materializes once per session via localCheckpoint (the
     pair set is tiny — O(dups), not O(corpus)) instead of re-running
     the candidate join + verification per query."""
-    key = (session_key(spark), sf_dir)
-    if key not in _JACCARD_PAIR_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _JACCARD_PAIR_CACHE:
-                from ..operators import dedup as D
+    from ..operators import dedup as D
 
-                docs = table(spark, sf_dir, "documents")
-                _JACCARD_PAIR_CACHE[key] = D.ngram_jaccard_pairs(
-                    docs,
-                    shared_lsh_candidates(spark, sf_dir),
-                    threshold=0.8,
-                    shingles=shared_shingles(spark, sf_dir),
-                ).localCheckpoint()
-    return _JACCARD_PAIR_CACHE[key]
+    docs = table(spark, sf_dir, "documents")
+    return D.ngram_jaccard_pairs(
+        docs,
+        shared_lsh_candidates(spark, sf_dir),
+        threshold=0.8,
+        shingles=shared_shingles(spark, sf_dir),
+    ).localCheckpoint()
 
 
 EVENTS_RAW_SCHEMA = (

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from . import MEMO_BUILD_LOCK, query, table
+from . import memo, query, scoped_conf, table
 from ..operators import similarity as S
 
 # ---------------------------------------------------------------------------
@@ -575,10 +575,6 @@ def _er_oracle_ctes():
     return ",\n".join(ctes)
 
 
-_ER_PAT_CACHE: dict = {}
-_ER_PARAM_CACHE: dict = {}
-
-
 def er_source_a(cust):
     """Source A: the reference records (shared by batch and streaming —
     the single definition the `stream_er_match` parity invariant rests
@@ -633,22 +629,18 @@ def _er_pairs(spark, sf):
     return er_gamma(fan_out(er_source_a(c)).join(er_source_b(c), "nk"))
 
 
+@memo
 def _er_pattern_frame(spark, sf):
     """(g1, g2, g3, n, n_true) — the candidate pairs reduced to ≤ 2^3
     comparison-pattern rows in one map-side-combinable aggregate;
     localCheckpointed because the EM re-reads it _ER_ITERS times."""
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _ER_PAT_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _ER_PAT_CACHE:
-                pat = (
-                    _er_pairs(spark, sf)
-                    .groupBy("g1", "g2", "g3")
-                    .agg(F.count(F.lit(1)).alias("n"),
-                         F.count_if(F.col("id_a") == F.col("id_b")).alias("n_true"))
-                )
-                _ER_PAT_CACHE[key] = pat.localCheckpoint()
-    return _ER_PAT_CACHE[key]
+    pat = (
+        _er_pairs(spark, sf)
+        .groupBy("g1", "g2", "g3")
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.count_if(F.col("id_a") == F.col("id_b")).alias("n_true"))
+    )
+    return pat.localCheckpoint()
 
 
 def _er_lit(v):
@@ -694,18 +686,14 @@ def _er_w_col(par):
     return F.round(pm.cast("double") / (pm + pu).cast("double"), 6).cast(_ER_W)
 
 
+@memo
 def shared_er_params(spark, sf):
     """Session-memoized EM fit: dict of 7 exact 1e-6-grid Decimals
     (m1..m3, u1..u3, lam). Each iteration is ONE engine-side job over
     the 8-row pattern frame — posterior projection + weighted-sum
     aggregate + clamped grid update in the same plan — collecting 7
     bounded values that re-enter the next iteration as literals."""
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _ER_PARAM_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _ER_PARAM_CACHE:
-                _ER_PARAM_CACHE[key] = _er_em_fit(_er_pattern_frame(spark, sf))
-    return _ER_PARAM_CACHE[key]
+    return _er_em_fit(_er_pattern_frame(spark, sf))
 
 
 def _er_em_fit(pat):
@@ -781,12 +769,8 @@ def _er_em_fit(pat):
     # method): the chained EM is _ER_ITERS sequential one-row
     # aggregates; AQE has nothing to re-plan and charges a driver
     # sync per stage. Plan-shape property, not bench-scale tuning.
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
         row = pframe.collect()[0]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return {n: row[f"_p_{n}"] for n in pnames}
 
 
@@ -898,7 +882,7 @@ def er_params_roundtrip(spark, sf):
     what a later linkage session sees), and THOSE decimals score the
     comparison-pattern frame. A production linkage model is trained
     once and classifies for months; before this entry the parameters
-    lived only in the session memo (``_ER_PARAM_CACHE``). The oracle
+    lived only in the session memo (``shared_er_params``). The oracle
     is the same exact train-replay + classify SQL as
     ``er_match_classify`` — equality proves classify ≡ in-session,
     i.e. parquet DECIMAL(7,6) round-trips the grid exactly and the

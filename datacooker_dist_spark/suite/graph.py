@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import query, scoped_conf, table
 
 _ITERS = 5
 _DAMP_PPB = 850_000_000
@@ -66,7 +66,7 @@ def graph_pagerank(spark, sf):
     the same five integer-arithmetic rounds as chained CTEs."""
     from ..operators.graph import pagerank
 
-    with _scoped_partitions(spark):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 8):
         # eager: the loop executes NOW, while the scoped partition count
         # is in force (a lazy return would run under the caller's restored
         # conf), and the operator releases its cached adjacency.
@@ -76,25 +76,6 @@ def graph_pagerank(spark, sf):
             damping_ppb=_DAMP_PPB,
             eager=True,
         )
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _scoped_partitions(spark, n: int = 8):
-    """Temporarily scope shuffle partitions to the graph's size: the
-    multi-stage iterative loops schedule rounds × partitions tasks, and
-    at ~1M edges 8 beats 32 (less per-stage scheduling overhead). Only
-    valid around operators that materialize EAGERLY inside the scope
-    (localCheckpoint) — a lazy plan would execute under the caller's
-    restored conf."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _trade_edges(spark, sf):
@@ -188,7 +169,7 @@ def graph_triangles(spark, sf):
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= 2)
     )
-    with _scoped_partitions(spark):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 8):
         # eager: the operator localCheckpoints its result inside.
         return triangle_participation(pairs, src="pa", dst="pb")
 
@@ -238,7 +219,7 @@ def graph_bfs_hops(spark, sf):
     )
     # K=3 is small and fixed → the unrolled single-job strategy (no
     # per-round driver sync); the frontier loop remains the
-    # unbounded-depth path. No _scoped_partitions here: the unrolled
+    # unbounded-depth path. No scoped_conf here: the unrolled
     # plan is fully LAZY, so a scoped conf would be restored before
     # execution (silent no-op) — the level shuffles are small and AQE
     # coalesces them at runtime instead.
@@ -323,7 +304,7 @@ def graph_kcore(spark, sf):
     edges = pairs.select(
         F.col("pa").alias("src"), F.col("pb").alias("dst")
     ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-    with _scoped_partitions(spark):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 8):
         # eager by construction: every peeling round localCheckpoints.
         return k_core(edges, k=_KCORE_K)
 

@@ -24,7 +24,7 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as T
 from ..session import default_parallelism, fan_out
-from . import MEMO_BUILD_LOCK, query, session_key, table
+from . import memo, query, scoped_conf, table
 
 # DuckDB twins of the engine's tokenization / shingling conventions
 # (operators.dedup.tokens_col / shingles_col).
@@ -36,10 +36,6 @@ SQL_SHINGLES = f"""
 """
 
 
-_EMB_PAIR_CACHE: dict = {}
-_PQ_INDEX_CACHE: dict = {}
-_IVF_INDEX_CACHE: dict = {}
-
 # Lloyd iterations for the suite's shared ANN indexes (VERDICT r03 task
 # 2). Measured recall@5 at sf0.01 after the r05 unbiased-sample + spilled
 # -assignment changes: ivf 0.74, pq 0.80, ivfpq+rerank 0.96 (vs 0.64 /
@@ -47,6 +43,7 @@ _IVF_INDEX_CACHE: dict = {}
 ANN_REFINE_ITERS = 3
 
 
+@memo
 def shared_pq_index(spark, sf, dim=64, m=32, n_codes=32):
     """Session-memoized PQ index (codebooks + encoded corpus) — the PQ and
     IVF-PQ top-k queries score from the identical code table, so the
@@ -56,17 +53,12 @@ def shared_pq_index(spark, sf, dim=64, m=32, n_codes=32):
     Lloyd passes per subspace). The memo key includes ``dim`` (ADVICE
     r03): same (m, n_codes) at a different dimensionality is a different
     index."""
-    key = (session_key(spark), sf, dim, m, n_codes)
-    if key not in _PQ_INDEX_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _PQ_INDEX_CACHE:
-                emb = fan_out(table(spark, sf, "embeddings"))
-                cb = S.pq_codebooks(
-                    emb, dim, m, n_codes, refine_iters=ANN_REFINE_ITERS
-                ).localCheckpoint()
-                enc = S.pq_encode(emb, cb, dim, m).localCheckpoint()
-                _PQ_INDEX_CACHE[key] = (cb, enc)
-    return _PQ_INDEX_CACHE[key]
+    emb = fan_out(table(spark, sf, "embeddings"))
+    cb = S.pq_codebooks(
+        emb, dim, m, n_codes, refine_iters=ANN_REFINE_ITERS
+    ).localCheckpoint()
+    enc = S.pq_encode(emb, cb, dim, m).localCheckpoint()
+    return (cb, enc)
 
 
 def _bmp_fixture_payload_fn():
@@ -118,9 +110,7 @@ def _bmp_fixture_payload_fn():
     return bmp_payload
 
 
-_DHASH_CACHE: dict = {}
-
-
+@memo
 def shared_dhash_hashes(spark, sf):
     """Session-memoized dHash table over the synthetic BMP fixture
     corpus (one genuine 24-bit BMP per doc_id < 600, the
@@ -129,25 +119,18 @@ def shared_dhash_hashes(spark, sf):
     blocking report's dHash rows grade the identical hash table, so
     the byte-level BMP build + decode + pool + hash pass runs once
     per session."""
-    key = (session_key(spark), sf)
-    if key not in _DHASH_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _DHASH_CACHE:
-                media = (
-                    fan_out(table(spark, sf, "documents"))
-                    .filter(F.col("doc_id") < 600)
-                    .select(
-                        F.col("doc_id").alias("media_id"),
-                        _bmp_fixture_payload_fn()("doc_id").alias("payload"),
-                    )
-                )
-                _DHASH_CACHE[key] = M.dhash_images(media).localCheckpoint()
-    return _DHASH_CACHE[key]
+    media = (
+        fan_out(table(spark, sf, "documents"))
+        .filter(F.col("doc_id") < 600)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            _bmp_fixture_payload_fn()("doc_id").alias("payload"),
+        )
+    )
+    return M.dhash_images(media).localCheckpoint()
 
 
-_EXACT_TOPK_CACHE: dict = {}
-
-
+@memo
 def shared_exact_topk(spark, sf, k=5):
     """Session-memoized exact brute-force top-k reference set for the
     standard report query set (vec_id < 10): (query_id, exact_nb),
@@ -156,22 +139,15 @@ def shared_exact_topk(spark, sf, k=5):
     (VERDICT r07 task 8 split the report along the budget axis, and
     the shared frames stay memoized so the split costs no extra exact
     corpus pass)."""
-    key = (session_key(spark), sf, k)
-    if key not in _EXACT_TOPK_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _EXACT_TOPK_CACHE:
-                emb = table(spark, sf, "embeddings")
-                _EXACT_TOPK_CACHE[key] = (
-                    S.cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=k)
-                    .select("query_id", F.col("neighbor_id").alias("exact_nb"))
-                    .localCheckpoint()
-                )
-    return _EXACT_TOPK_CACHE[key]
+    emb = table(spark, sf, "embeddings")
+    return (
+        S.cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=k)
+        .select("query_id", F.col("neighbor_id").alias("exact_nb"))
+        .localCheckpoint()
+    )
 
 
-_SQ8_INDEX_CACHE: dict = {}
-
-
+@memo
 def shared_sq8_index(spark, sf):
     """Session-memoized SQ8 scalar-quantization index (VERDICT r07
     task 3): the per-dimension (min, max) training table plus the
@@ -179,15 +155,10 @@ def shared_sq8_index(spark, sf):
     passes at all — SQ8's selling point over PQ is zero-training
     simplicity); the encode is one Arrow pass. The code table is
     corpus-rows × (dim bytes + 1 norm), checkpoint-cheap."""
-    key = (session_key(spark), sf)
-    if key not in _SQ8_INDEX_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _SQ8_INDEX_CACHE:
-                emb = fan_out(table(spark, sf, "embeddings"))
-                p = S.sq8_params(emb).localCheckpoint()
-                enc = S.sq8_encode(emb, p).localCheckpoint()
-                _SQ8_INDEX_CACHE[key] = (p, enc)
-    return _SQ8_INDEX_CACHE[key]
+    emb = fan_out(table(spark, sf, "embeddings"))
+    p = S.sq8_params(emb).localCheckpoint()
+    enc = S.sq8_encode(emb, p).localCheckpoint()
+    return (p, enc)
 
 
 # Spilled assignment width for the shared IVF index (ScaNN/SOAR-style):
@@ -200,6 +171,7 @@ def shared_sq8_index(spark, sf):
 IVF_SPILL = 2
 
 
+@memo
 def shared_ivf_index(spark, sf, n_cells=16):
     """Session-memoized IVF index: k-means-refined centroids + the full
     cell assignment (spilled ``IVF_SPILL`` ways), both checkpointed so
@@ -208,22 +180,15 @@ def shared_ivf_index(spark, sf, n_cells=16):
     top-k, the IVF-PQ stack, and the recall report all probe the same
     cells). Training ids are the unbiased hash-shuffled sample (VERDICT
     r04: the id-prefix sample fit the oldest corpus slice)."""
-    key = (session_key(spark), sf, n_cells)
-    if key not in _IVF_INDEX_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _IVF_INDEX_CACHE:
-                emb = fan_out(table(spark, sf, "embeddings"))
-                centroids, assigned = S.ivf_cells(
-                    emb, n_cells=n_cells, refine_iters=ANN_REFINE_ITERS,
-                    assign_spill=IVF_SPILL,
-                )
-                _IVF_INDEX_CACHE[key] = (
-                    centroids.localCheckpoint(), assigned.localCheckpoint()
-                )
-    return _IVF_INDEX_CACHE[key]
+    emb = fan_out(table(spark, sf, "embeddings"))
+    centroids, assigned = S.ivf_cells(
+        emb, n_cells=n_cells, refine_iters=ANN_REFINE_ITERS,
+        assign_spill=IVF_SPILL,
+    )
+    return (
+        centroids.localCheckpoint(), assigned.localCheckpoint()
+    )
 
-
-_KNN_GRAPH_CACHE: dict = {}
 
 # kNN-graph production parameters (round 10): k=10 out-neighbors, 2
 # NN-descent rounds over the IVF-seeded graph — the measured knee at
@@ -234,27 +199,21 @@ KNN_GRAPH_K = 10
 KNN_GRAPH_ROUNDS = 2
 
 
+@memo
 def shared_knn_graph(spark, sf):
     """Session-memoized NN-descent kNN graph (round 10, VERDICT r09
     task 1) over the shared IVF index's cells: built once per session
     (the iterative rounds checkpoint internally), consumed by the graph
     build entry, the graph search path, the parquet round-trip, the
     recall report row, and the scorecard dominance row."""
-    key = (session_key(spark), sf)
-    if key not in _KNN_GRAPH_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _KNN_GRAPH_CACHE:
-                emb = fan_out(table(spark, sf, "embeddings"))
-                _KNN_GRAPH_CACHE[key] = S.knn_graph_build(
-                    emb, k=KNN_GRAPH_K, rounds=KNN_GRAPH_ROUNDS,
-                    cells=shared_ivf_index(spark, sf),
-                ).localCheckpoint()
-    return _KNN_GRAPH_CACHE[key]
+    emb = fan_out(table(spark, sf, "embeddings"))
+    return S.knn_graph_build(
+        emb, k=KNN_GRAPH_K, rounds=KNN_GRAPH_ROUNDS,
+        cells=shared_ivf_index(spark, sf),
+    ).localCheckpoint()
 
 
-_FORGOT_GRAPH_CACHE: dict = {}
-
-
+@memo
 def shared_forgotten_knn_graph(spark, sf):
     """Session-memoized FORGOTTEN-PURGED kNN graph (round 11): the
     shared full-corpus graph with the forget set (vec_id % 53 = 0)
@@ -263,46 +222,32 @@ def shared_forgotten_knn_graph(spark, sf):
     Consumed by ``privacy_forget_index`` (written cold + invariant-
     diffed) and ``privacy_forget_probe`` (searched), so the bounded
     repair pass runs once per session."""
-    key = (session_key(spark), sf)
-    if key not in _FORGOT_GRAPH_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _FORGOT_GRAPH_CACHE:
-                emb = table(spark, sf, "embeddings")
-                forget = emb.filter(F.col("vec_id") % 53 == 0).select("vec_id")
-                purged = emb.join(F.broadcast(forget), "vec_id", "left_anti")
-                _FORGOT_GRAPH_CACHE[key] = S.knn_graph_forget(
-                    shared_knn_graph(spark, sf), forget, purged,
-                    shared_ivf_index(spark, sf), k=KNN_GRAPH_K, spilled=True,
-                ).localCheckpoint()
-    return _FORGOT_GRAPH_CACHE[key]
+    emb = table(spark, sf, "embeddings")
+    forget = emb.filter(F.col("vec_id") % 53 == 0).select("vec_id")
+    purged = emb.join(F.broadcast(forget), "vec_id", "left_anti")
+    return S.knn_graph_forget(
+        shared_knn_graph(spark, sf), forget, purged,
+        shared_ivf_index(spark, sf), k=KNN_GRAPH_K, spilled=True,
+    ).localCheckpoint()
 
 
-_BASE_KNN_CACHE: dict = {}
-
-
+@memo
 def shared_base_knn_graph(spark, sf, k=10):
     """Session-memoized BASE-corpus (vec_id % 5 ≠ 0) IVF cells +
     NN-descent graph — the standing index the streaming graph probe
     and the incremental append path both consume (each previously
     built its own: two ~15 s sf0.1 builds for one artifact)."""
-    key = (session_key(spark), sf, k)
-    if key not in _BASE_KNN_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _BASE_KNN_CACHE:
-                emb = fan_out(table(spark, sf, "embeddings"))
-                base = emb.filter(F.col("vec_id") % 5 != 0)
-                cells = S.ivf_cells(base, n_cells=16)
-                cells = (cells[0].localCheckpoint(), cells[1].localCheckpoint())
-                graph = S.knn_graph_build(
-                    base, k=k, rounds=2, cells=cells
-                ).localCheckpoint()
-                _BASE_KNN_CACHE[key] = (cells, graph)
-    return _BASE_KNN_CACHE[key]
+    emb = fan_out(table(spark, sf, "embeddings"))
+    base = emb.filter(F.col("vec_id") % 5 != 0)
+    cells = S.ivf_cells(base, n_cells=16)
+    cells = (cells[0].localCheckpoint(), cells[1].localCheckpoint())
+    graph = S.knn_graph_build(
+        base, k=k, rounds=2, cells=cells
+    ).localCheckpoint()
+    return (cells, graph)
 
 
-_RESID_INDEX_CACHE: dict = {}
-
-
+@memo
 def shared_residual_index(spark, sf, dim=64, m=32, n_codes=32):
     """Session-memoized residual IVF-PQ index (VERDICT r05 task 5):
     ``(centroids, residual codebooks, (id, cell, _tnorm, codes)
@@ -313,25 +258,18 @@ def shared_residual_index(spark, sf, dim=64, m=32, n_codes=32):
     top-k query and the recall report; materialized by
     ``similarity_index_build_residual`` so the one-time encode bills to the
     named build query."""
-    key = (session_key(spark), sf, dim, m, n_codes)
-    if key not in _RESID_INDEX_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _RESID_INDEX_CACHE:
-                emb = fan_out(table(spark, sf, "embeddings"))
-                centroids, cb, index = S.ivfpq_residual_index(
-                    emb, dim, m, n_codes,
-                    refine_iters=ANN_REFINE_ITERS,
-                    cells=shared_ivf_index(spark, sf),
-                )
-                _RESID_INDEX_CACHE[key] = (
-                    centroids, cb.localCheckpoint(), index.localCheckpoint()
-                )
-    return _RESID_INDEX_CACHE[key]
+    emb = fan_out(table(spark, sf, "embeddings"))
+    centroids, cb, index = S.ivfpq_residual_index(
+        emb, dim, m, n_codes,
+        refine_iters=ANN_REFINE_ITERS,
+        cells=shared_ivf_index(spark, sf),
+    )
+    return (
+        centroids, cb.localCheckpoint(), index.localCheckpoint()
+    )
 
 
-_OPQ_INDEX_CACHE: dict = {}
-
-
+@memo
 def shared_opq_index(spark, sf, dim=64, m=32, n_codes=32):
     """Session-memoized OPQ index (VERDICT r06 task 1): the learned
     orthogonal rotation (parametric OPQ — eigenvalue allocation over
@@ -344,28 +282,21 @@ def shared_opq_index(spark, sf, dim=64, m=32, n_codes=32):
     ``(rotated_corpus, rotated_centroids, codebooks, encoded)``;
     materialized by ``similarity_index_build_opq`` so the rotation +
     train + encode bill to the named build."""
-    key = (session_key(spark), sf, dim, m, n_codes)
-    if key not in _OPQ_INDEX_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _OPQ_INDEX_CACHE:
-                emb = fan_out(table(spark, sf, "embeddings"))
-                R = S.opq_rotation(emb, dim, m)
-                rot = S.opq_rotate(emb, R).localCheckpoint()
-                centroids, _ = shared_ivf_index(spark, sf)
-                rot_cents = S.opq_rotate(
-                    centroids, R, id_col="cell", vec_col="_cv"
-                ).localCheckpoint()
-                cb = S.pq_codebooks(
-                    rot, dim, m, n_codes, refine_iters=ANN_REFINE_ITERS
-                ).localCheckpoint()
-                enc = S.pq_encode(rot, cb, dim, m).localCheckpoint()
-                _OPQ_INDEX_CACHE[key] = (rot, rot_cents, cb, enc)
-    return _OPQ_INDEX_CACHE[key]
+    emb = fan_out(table(spark, sf, "embeddings"))
+    R = S.opq_rotation(emb, dim, m)
+    rot = S.opq_rotate(emb, R).localCheckpoint()
+    centroids, _ = shared_ivf_index(spark, sf)
+    rot_cents = S.opq_rotate(
+        centroids, R, id_col="cell", vec_col="_cv"
+    ).localCheckpoint()
+    cb = S.pq_codebooks(
+        rot, dim, m, n_codes, refine_iters=ANN_REFINE_ITERS
+    ).localCheckpoint()
+    enc = S.pq_encode(rot, cb, dim, m).localCheckpoint()
+    return (rot, rot_cents, cb, enc)
 
 
-_OPQ_RESID_CACHE: dict = {}
-
-
+@memo
 def shared_opq_residual_index(spark, sf, dim=64, m=16, n_codes=16):
     """Session-memoized OPQ+RESIDUAL index — the full FAISS
     ``OPQ,IVF,PQ`` factory layout, composing both r06/r07 encodings:
@@ -381,48 +312,37 @@ def shared_opq_residual_index(spark, sf, dim=64, m=16, n_codes=16):
     0.40 (OPQ alone) / 0.32 (raw).
     Returns ``(rot_centroids, residual codebooks, index)``;
     materialized by ``similarity_index_build_opq``."""
-    key = (session_key(spark), sf, dim, m, n_codes)
-    if key not in _OPQ_RESID_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _OPQ_RESID_CACHE:
-                rot, rot_cents, _, _ = shared_opq_index(spark, sf, dim, m, n_codes)
-                _, assigned = shared_ivf_index(spark, sf)
-                rot_assigned = (
-                    assigned.select("vec_id", "cell")
-                    .join(rot, "vec_id")
-                    .select("vec_id", "cell", F.col("embedding").alias("vector"))
-                )
-                centroids, cb, index = S.ivfpq_residual_index(
-                    rot, dim, m, n_codes,
-                    refine_iters=ANN_REFINE_ITERS,
-                    cells=(rot_cents, rot_assigned),
-                )
-                _OPQ_RESID_CACHE[key] = (
-                    centroids, cb.localCheckpoint(), index.localCheckpoint()
-                )
-    return _OPQ_RESID_CACHE[key]
+    rot, rot_cents, _, _ = shared_opq_index(spark, sf, dim, m, n_codes)
+    _, assigned = shared_ivf_index(spark, sf)
+    rot_assigned = (
+        assigned.select("vec_id", "cell")
+        .join(rot, "vec_id")
+        .select("vec_id", "cell", F.col("embedding").alias("vector"))
+    )
+    centroids, cb, index = S.ivfpq_residual_index(
+        rot, dim, m, n_codes,
+        refine_iters=ANN_REFINE_ITERS,
+        cells=(rot_cents, rot_assigned),
+    )
+    return (
+        centroids, cb.localCheckpoint(), index.localCheckpoint()
+    )
 
 
-_KGRAM_CACHE: dict = {}
-
-
+@memo
 def shared_kgram_rows(spark, sf, k=10):
     """Session-memoized strict k-token window occurrences (id, pos,
     gram-hash) over ``documents`` — the substring-span pair merge and the
     per-doc duplicated-fraction report consume the identical inverted
     index, so the tokenize/window/hash pass runs once per session."""
-    key = (session_key(spark), sf, k)
-    if key not in _KGRAM_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _KGRAM_CACHE:
-                from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-                _KGRAM_CACHE[key] = D.kgram_occurrence_rows(
-                    fan_out(table(spark, sf, "documents")), k=k
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-    return _KGRAM_CACHE[key]
+    return D.kgram_occurrence_rows(
+        fan_out(table(spark, sf, "documents")), k=k
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@memo
 def shared_embedding_pairs(spark, sf):
     """Session-memoized exact-cosine near-dup pairs (≥ 0.45 on the bounded
     slice) from the LSH candidate pipeline — `dedup_embedding` and
@@ -430,19 +350,14 @@ def shared_embedding_pairs(spark, sf):
     signature/join/verify pipeline runs once per session and the (tiny)
     verified pair list is checkpointed (same pattern as
     `shared_shingles`)."""
-    key = (session_key(spark), sf)
-    if key not in _EMB_PAIR_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _EMB_PAIR_CACHE:
-                emb = table(spark, sf, "embeddings").filter(F.col("vec_id") < 500)
-                pairs = S.cosine_candidate_pairs(
-                    emb, threshold=0.45, dim=64, planes=2, tables=32
-                )
-                # The verified output is a handful of rows; localCheckpoint
-                # materializes it eagerly and truncates the 6-stage LSH lineage so
-                # the clusters query starts from the tiny edge list.
-                _EMB_PAIR_CACHE[key] = pairs.localCheckpoint()
-    return _EMB_PAIR_CACHE[key]
+    emb = table(spark, sf, "embeddings").filter(F.col("vec_id") < 500)
+    pairs = S.cosine_candidate_pairs(
+        emb, threshold=0.45, dim=64, planes=2, tables=32
+    )
+    # The verified output is a handful of rows; localCheckpoint
+    # materializes it eagerly and truncates the 6-stage LSH lineage so
+    # the clusters query starts from the tiny edge list.
+    return pairs.localCheckpoint()
 
 
 # ----------------------------------------------------------------- dedup
@@ -2062,15 +1977,10 @@ def dedup_semantic_clusters(spark, sf):
     the single-job union-find CC."""
     emb = table(spark, sf, "embeddings")
     cells = S.hyperplane_cells(emb, dim=64, planes=2)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        out = S.semantic_dedup_clusters(
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 4):
+        return S.semantic_dedup_clusters(
             emb, cells, threshold=0.40, dim=64
         ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return out
 
 
 @query("dedup_semantic_ivf")  # rows-only: k-means cells aren't SQL-replayable
@@ -2089,16 +1999,11 @@ def dedup_semantic_ivf(spark, sf):
     twin is ``dedup_semantic_clusters``."""
     emb = table(spark, sf, "embeddings")
     _, assigned = shared_ivf_index(spark, sf)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        out = S.semantic_dedup_clusters(
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 4):
+        return S.semantic_dedup_clusters(
             emb, assigned.select("vec_id", "cell"),
             threshold=0.45, dim=64,
         ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return out
 
 
 @query("dedup_semantic_ivf_multiprobe")  # rows-only: k-means cells
@@ -2123,15 +2028,10 @@ def dedup_semantic_ivf_multiprobe(spark, sf):
     probes = S.ivf_assign(emb, cents, assign_spill=4).select(
         "vec_id", "cell"
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        out = S.semantic_dedup_clusters(
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 4):
+        return S.semantic_dedup_clusters(
             emb, probes, threshold=0.45, dim=64
         ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return out
 
 
 @query("dedup_semantic_graph")  # rows-only: the graph build is iterative
@@ -2164,14 +2064,10 @@ def dedup_semantic_graph(spark, sf):
         )
         .distinct()
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 4):
         cc = D.connected_components(pairs).select(
             F.col("id_a").alias("vec_id"), "cluster_id"
         ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     members = emb.select("vec_id", "label").join(cc, "vec_id", "left").select(
         "vec_id", "label",
         F.coalesce("cluster_id", "vec_id").alias("cluster_id"),
@@ -3210,9 +3106,7 @@ def _probe_pairs(probe, base, id_col="vec_id"):
     )
 
 
-_JTRUTH_CACHE: dict = {}
-
-
+@memo
 def shared_jaccard_truth(spark, sf):
     """Session-memoized EXACT blocking-free Jaccard ≥ 0.8 ground truth
     (lossless AllPairs prefix filter) — the measurement artifact both
@@ -3222,37 +3116,25 @@ def shared_jaccard_truth(spark, sf):
     report's whole truth build in the same bench chunk)."""
     from . import shared_shingles
 
-    key = (session_key(spark), sf)
-    if key not in _JTRUTH_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _JTRUTH_CACHE:
-                _JTRUTH_CACHE[key] = (
-                    D.jaccard_pairs_allpairs(
-                        table(spark, sf, "documents"),
-                        shingles=shared_shingles(spark, sf),
-                    )
-                    .select("id_a", "id_b")
-                    .localCheckpoint()
-                )
-    return _JTRUTH_CACHE[key]
+    return (
+        D.jaccard_pairs_allpairs(
+            table(spark, sf, "documents"),
+            shingles=shared_shingles(spark, sf),
+        )
+        .select("id_a", "id_b")
+        .localCheckpoint()
+    )
 
 
-_COSTRUTH_CACHE: dict = {}
-
-
+@memo
 def shared_cosine_truth(spark, sf):
     """Session-memoized exact all-pairs cosine ≥ 0.40 ground truth
     (rectangle-blocked Gram slabs) — shared by the blocking report's
     semantic rows and the scorecard's multiprobe invariants, same
     rationale as :func:`shared_jaccard_truth`."""
-    key = (session_key(spark), sf)
-    if key not in _COSTRUTH_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _COSTRUTH_CACHE:
-                _COSTRUTH_CACHE[key] = S.cosine_pairs_blocked(
-                    table(spark, sf, "embeddings"), 0.40
-                ).localCheckpoint()
-    return _COSTRUTH_CACHE[key]
+    return S.cosine_pairs_blocked(
+        table(spark, sf, "embeddings"), 0.40
+    ).localCheckpoint()
 
 
 @query(
@@ -3650,8 +3532,8 @@ def engine_scorecard(spark, sf):
     (``inheritable_thread_target`` so job-group attribution survives);
     the session memos every part reads are pre-warmed SEQUENTIALLY
     first (in bench order they are already built, so the pre-warm is
-    free; since round 12 the getters also hold MEMO_BUILD_LOCK, so a
-    concurrent first-touch is safe by construction, not convention). Values are
+    free; the getters are ``@memo`` functions, which lock per key, so a
+    concurrent first touch builds once by construction, not convention). Values are
     unchanged: parts share no mutable state, each scratch dir is
     unique, and the union order stays the fixed builder order."""
     from concurrent.futures import ThreadPoolExecutor
@@ -5409,9 +5291,7 @@ def afp_fingerprints(media):
     )
 
 
-_AFP_CACHE: dict = {}
-
-
+@memo
 def shared_afp_hashes(spark, sf):
     """Session-memoized WHT constellation fingerprints over the WAV
     fixture corpus (doc_id < 120): (media_id, g, fp_hash) — 8 bytes
@@ -5420,21 +5300,16 @@ def shared_afp_hashes(spark, sf):
     all grade the identical table, so the byte-level WAV build +
     decode + WHT pass runs once per session (the
     ``shared_dhash_hashes`` convention)."""
-    key = (session_key(spark), sf)
-    if key not in _AFP_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _AFP_CACHE:
-                media = (
-                    table(spark, sf, "documents")
-                    .filter(F.col("doc_id") < _AFP_DOCS)
-                    .select(
-                        F.col("doc_id").alias("media_id"),
-                        (F.col("doc_id") % _AFP_GROUPS).alias("g"),
-                        _wav_fixture_payload_fn()("doc_id").alias("payload"),
-                    )
-                )
-                _AFP_CACHE[key] = afp_fingerprints(media).localCheckpoint()
-    return _AFP_CACHE[key]
+    media = (
+        table(spark, sf, "documents")
+        .filter(F.col("doc_id") < _AFP_DOCS)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % _AFP_GROUPS).alias("g"),
+            _wav_fixture_payload_fn()("doc_id").alias("payload"),
+        )
+    )
+    return afp_fingerprints(media).localCheckpoint()
 
 
 @query(

@@ -9,7 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
-from . import query, table
+from . import query, scoped_conf, table
 
 # The word-soup corpus carries no real PII; a synthetic column with planted
 # identifiers exercises the scrubbers deterministically.
@@ -164,17 +164,10 @@ def dedup_clusters(spark, sf):
     from . import shared_jaccard_pairs
 
     pairs = shared_jaccard_pairs(spark, sf)
-    # CC's per-round joins run over the tiny pair list — scope shuffle
-    # partitions to it (the rounds are eager via localCheckpoint, so the
-    # scoped conf is in force when they execute).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        return D.connected_components(pairs.select("id_a", "id_b")).select(
-            F.col("id_a").alias("doc_id"), "cluster_id"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # CC's passes run over the tiny pair list — size its first pass to it.
+    return D.connected_components(
+        pairs.select("id_a", "id_b"), parts=4
+    ).select(F.col("id_a").alias("doc_id"), "cluster_id")
 
 
 @query(
@@ -233,9 +226,7 @@ def dedup_clusters_incremental(spark, sf):
     is_new_b = F.col("id_b") % 5 == 0
     base_pairs = pairs.filter(~is_new_a & ~is_new_b)
     batch_pairs = pairs.filter(is_new_a | is_new_b)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 4):
         standing = (
             D.connected_components(base_pairs.select("id_a", "id_b"))
             .select(F.col("id_a").alias("node"), F.col("cluster_id").alias("root"))
@@ -244,8 +235,6 @@ def dedup_clusters_incremental(spark, sf):
         return D.incremental_components(
             standing, batch_pairs.select("id_a", "id_b")
         ).select(F.col("node").alias("doc_id"), "cluster_id")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @query(
@@ -300,9 +289,7 @@ def dedup_clusters_roundtrip(spark, sf):
     is_new_b = F.col("id_b") % 5 == 0
     base_pairs = pairs.filter(~is_new_a & ~is_new_b)
     batch_pairs = pairs.filter(is_new_a | is_new_b)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 4):
         standing = (
             D.connected_components(base_pairs.select("id_a", "id_b"))
             .select(
@@ -324,8 +311,6 @@ def dedup_clusters_roundtrip(spark, sf):
         return D.incremental_components(
             ds.df, batch_pairs.select("id_a", "id_b")
         ).select(F.col("node").alias("doc_id"), "cluster_id")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @query(
@@ -362,14 +347,9 @@ def dedup_embedding_clusters(spark, sf):
     from .llm import shared_embedding_pairs
 
     pairs = shared_embedding_pairs(spark, sf)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        return D.connected_components(
-            pairs.select("id_a", "id_b")
-        ).select(F.col("id_a").alias("vec_id"), "cluster_id")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return D.connected_components(
+        pairs.select("id_a", "id_b"), parts=4
+    ).select(F.col("id_a").alias("vec_id"), "cluster_id")
 
 
 @query(
@@ -1416,12 +1396,7 @@ def dedup_golden_record(spark, sf):
 
     docs = table(spark, sf, "documents")
     pairs = shared_jaccard_pairs(spark, sf)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        labels = D.connected_components(pairs.select("id_a", "id_b"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    labels = D.connected_components(pairs.select("id_a", "id_b"), parts=4)
     members = (
         docs.join(
             labels.withColumnRenamed("id_a", "doc_id"), "doc_id", "left"
@@ -1489,9 +1464,7 @@ def _golden_incremental(spark, sf, roundtrip_state=False):
     base_pairs = pairs.filter(~is_new_a & ~is_new_b)
     batch_pairs = pairs.filter(is_new_a | is_new_b)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 4):
         standing = (
             D.connected_components(base_pairs.select("id_a", "id_b"))
             .select(
@@ -1544,8 +1517,6 @@ def _golden_incremental(spark, sf, roundtrip_state=False):
         updated = D.incremental_components(
             standing, batch_pairs.select("id_a", "id_b")
         ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     # Affected clusters = new cluster ids holding a BATCH-EDGE endpoint:
     # a standing node's root changes ONLY through a merge path that
@@ -2924,14 +2895,9 @@ def split_leakage_safe(spark, sf):
 
     docs = table(spark, sf, "documents")
     pairs = shared_jaccard_truth(spark, sf)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        labels = D.connected_components(
-            pairs.select("id_a", "id_b")
-        ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    labels = D.connected_components(
+        pairs.select("id_a", "id_b"), parts=4
+    ).localCheckpoint()
     sides = docs.join(
         labels.withColumnRenamed("id_a", "doc_id"), "doc_id", "left"
     ).select(

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import tokens_col
 from ..operators.text import STOPWORDS as _STOP
-from . import MEMO_BUILD_LOCK, query, session_key, table
+from . import memo, query, scoped_conf, table
 from .llm import SQL_SHINGLES, SQL_TOKENS, _LANG_SCORE_SQL
 
 _STOP_SQL = "('" + "', '".join(_STOP) + "')"
@@ -398,9 +398,7 @@ def pipeline_quality_attrition(spark, sf):
     )
 
 
-_BPE_MERGES_CACHE: dict = {}
-
-
+@memo
 def shared_bpe_merges(spark, sf):
     """Session-memoized BPE merge table (rounds=5, batch=4, doc_id <
     200) — the trainer ran once per CONSUMER before r09 (merges report,
@@ -408,15 +406,10 @@ def shared_bpe_merges(spark, sf):
     one bench session); the adaptive fit is deterministic for a fixed
     corpus (tiebreak pinned), so memoizing it is attribution hygiene,
     not a semantics change."""
-    key = (session_key(spark), sf)
-    if key not in _BPE_MERGES_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _BPE_MERGES_CACHE:
-                from ..operators.text import bpe_merges
+    from ..operators.text import bpe_merges
 
-                docs = table(spark, sf, "documents").filter(F.col("doc_id") < 200)
-                _BPE_MERGES_CACHE[key] = bpe_merges(docs, rounds=5, batch=4)
-    return _BPE_MERGES_CACHE[key]
+    docs = table(spark, sf, "documents").filter(F.col("doc_id") < 200)
+    return bpe_merges(docs, rounds=5, batch=4)
 
 
 @query("tokenizer_bpe_merges")  # rows-only: merges depend on argmax per round
@@ -714,36 +707,27 @@ def _qcls_p_expr(wexprs):
     )
 
 
-_QCLS_CACHE: dict = {}
-_QCLS_FEATS_CACHE: dict = {}
-
-
+@memo
 def shared_qcls_features(spark, sf):
     """Session-memoized CHECKPOINTED design matrix — train and score
     consume the identical frame, so the corpus featurization (tokenize +
     hash + conditional counts, the only corpus-sized pass) happens once
     per session instead of once per consumer (r8: score re-paid ~10 s of
     featurization at sf0.1 with the weights already memoized)."""
-    key = (session_key(spark), sf)
-    if key not in _QCLS_FEATS_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _QCLS_FEATS_CACHE:
-                # Fan the CHECKPOINTED matrix out too (optimization round 11,
-                # guide §2.5): the featurization ends in an AQE-coalesced
-                # single partition at bench scale, so every downstream gradient
-                # stage — 20 of them in the chained fit — evaluated the deep
-                # decimal p-expression SINGLE-THREADED over the whole matrix.
-                # The checkpoint freezes pre-repartition layout, so the fan-out
-                # must land before it. Gradient sums are decimal-exact
-                # (order-independent) — values unchanged under any layout.
-                from ..session import fan_out
+    # Fan the CHECKPOINTED matrix out too (optimization round 11,
+    # guide §2.5): the featurization ends in an AQE-coalesced
+    # single partition at bench scale, so every downstream gradient
+    # stage — 20 of them in the chained fit — evaluated the deep
+    # decimal p-expression SINGLE-THREADED over the whole matrix.
+    # The checkpoint freezes pre-repartition layout, so the fan-out
+    # must land before it. Gradient sums are decimal-exact
+    # (order-independent) — values unchanged under any layout.
+    from ..session import fan_out
 
-                _QCLS_FEATS_CACHE[key] = fan_out(
-                    _qcls_features(spark, sf)
-                ).localCheckpoint()
-    return _QCLS_FEATS_CACHE[key]
+    return fan_out(_qcls_features(spark, sf)).localCheckpoint()
 
 
+@memo
 def shared_quality_classifier(spark, sf):
     """Session-memoized trained weights — a list of D + 2 exact
     ``Decimal`` values on the 1e-6 grid (w_0..w_{D-1}, w_len, w_bias).
@@ -776,72 +760,57 @@ def shared_quality_classifier(spark, sf):
     (asserted in the A/B and by the exact oracle replay)."""
     from decimal import Decimal
 
-    key = (session_key(spark), sf)
-    if key not in _QCLS_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _QCLS_CACHE:
-                feats = shared_qcls_features(spark, sf)
-                gcols = [f"g_{j}" for j in range(len(_QCLS_XCOLS))] + ["g_b"]
-                wnames = [f"_w_{j}" for j in range(_QCLS_D + 2)]
-                wschema = ", ".join(f"{n} decimal(15,6)" for n in wnames)
-                wexprs = [F.col(n) for n in wnames]
-                d_col = (
-                    _qcls_p_expr(wexprs) - F.col("y").cast(_QCLS_DEC)
-                ).alias("_d")
-                agg_cols = [
-                    F.count(F.lit(1)).alias("_n"),
-                    *[
-                        F.sum(
-                            (F.col("_d") * F.col(xc)).cast("decimal(25,12)")
-                        ).alias(gc)
-                        for xc, gc in zip(_QCLS_XCOLS, gcols)
-                    ],
-                    F.sum("_d").alias("g_b"),
-                    # w_{t-1} rides through the agg: constant per cross-joined
-                    # row, so min() IS the value — keeps the plan linear.
-                    *[F.min(F.col(wn)).alias(wn) for wn in wnames],
-                ]
-                upd_cols = [
-                    F.round(
-                        F.col(wn).cast("double")
-                        - (F.col(gc).cast("double") * F.lit(_QCLS_LR))
-                        / F.col("_n"),
-                        6,
-                    ).cast(_QCLS_DEC).alias(wn)
-                    for wn, gc in zip(wnames, gcols)
-                ]
-                w_df = spark.createDataFrame(
-                    [tuple([Decimal(0)] * (_QCLS_D + 2))], wschema
-                )
-                for _ in range(_QCLS_ITERS):
-                    proj = feats.crossJoin(F.broadcast(w_df)).select(
-                        *_QCLS_XCOLS, d_col, *wnames
-                    )
-                    w_df = proj.agg(*agg_cols).select(*upd_cols)
-                # AQE off for THIS collect only (optimization round
-                # 12, guide §1.2 step 3 — measured A/B: fit execution
-                # 13.2/6.8 s → 4.8/3.3 s at sf0.1/local[32], weights
-                # bit-identical): the chained fit is _QCLS_ITERS
-                # sequential full-batch aggregates collapsing to ONE
-                # row — AQE has nothing to re-plan (no coalescible
-                # output; the only join is an explicit broadcast) and
-                # charges a driver-synchronized stage re-optimization
-                # per aggregate. A property of the PLAN SHAPE, not of
-                # bench scale: at any corpus size each iteration's
-                # aggregate output is one row. Scoped with try/finally
-                # around the single collect; the memo contract
-                # (sequential pre-warm + MEMO_BUILD_LOCK) keeps
-                # concurrent observers out of builders.
-                prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                try:
-                    row = w_df.collect()[0]
-                finally:
-                    spark.conf.set(
-                        "spark.sql.adaptive.enabled", prev_aqe
-                    )
-                _QCLS_CACHE[key] = [row[i] for i in range(_QCLS_D + 2)]
-    return _QCLS_CACHE[key]
+    feats = shared_qcls_features(spark, sf)
+    gcols = [f"g_{j}" for j in range(len(_QCLS_XCOLS))] + ["g_b"]
+    wnames = [f"_w_{j}" for j in range(_QCLS_D + 2)]
+    wschema = ", ".join(f"{n} decimal(15,6)" for n in wnames)
+    wexprs = [F.col(n) for n in wnames]
+    d_col = (
+        _qcls_p_expr(wexprs) - F.col("y").cast(_QCLS_DEC)
+    ).alias("_d")
+    agg_cols = [
+        F.count(F.lit(1)).alias("_n"),
+        *[
+            F.sum(
+                (F.col("_d") * F.col(xc)).cast("decimal(25,12)")
+            ).alias(gc)
+            for xc, gc in zip(_QCLS_XCOLS, gcols)
+        ],
+        F.sum("_d").alias("g_b"),
+        # w_{t-1} rides through the agg: constant per cross-joined
+        # row, so min() IS the value — keeps the plan linear.
+        *[F.min(F.col(wn)).alias(wn) for wn in wnames],
+    ]
+    upd_cols = [
+        F.round(
+            F.col(wn).cast("double")
+            - (F.col(gc).cast("double") * F.lit(_QCLS_LR))
+            / F.col("_n"),
+            6,
+        ).cast(_QCLS_DEC).alias(wn)
+        for wn, gc in zip(wnames, gcols)
+    ]
+    w_df = spark.createDataFrame(
+        [tuple([Decimal(0)] * (_QCLS_D + 2))], wschema
+    )
+    for _ in range(_QCLS_ITERS):
+        proj = feats.crossJoin(F.broadcast(w_df)).select(
+            *_QCLS_XCOLS, d_col, *wnames
+        )
+        w_df = proj.agg(*agg_cols).select(*upd_cols)
+    # AQE off for THIS collect only (optimization round 12, guide §1.2
+    # step 3 — measured A/B: fit execution 13.2/6.8 s → 4.8/3.3 s at
+    # sf0.1/local[32], weights bit-identical): the chained fit is
+    # _QCLS_ITERS sequential full-batch aggregates collapsing to ONE row
+    # — AQE has nothing to re-plan (no coalescible output; the only join
+    # is an explicit broadcast) and charges a driver-synchronized stage
+    # re-optimization per aggregate. A property of the PLAN SHAPE, not of
+    # bench scale: at any corpus size each iteration's aggregate output
+    # is one row. The scope covers the single collect; scoped_conf takes
+    # no lock, so a job another thread runs meanwhile also sees AQE off.
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
+        row = w_df.collect()[0]
+    return [row[i] for i in range(_QCLS_D + 2)]
 
 
 def _qcls_p_sql(wnames):
@@ -1241,24 +1210,17 @@ def dataset_importance_resample(spark, sf):
     return sc.orderBy(F.desc("score"), "doc_id").limit(_DSIR_K)
 
 
-_UNI_VOCAB_CACHE: dict = {}
-
-
+@memo
 def shared_unigram_vocab(spark, sf):
     """Session-memoized unigram-LM vocabulary — the EM train runs once
     per session for the train-report query AND the apply query (the
     shared_quality_classifier convention; also the bench memo-cluster
     edge that keeps both in one session chunk)."""
-    key = (session_key(spark), sf)
-    if key not in _UNI_VOCAB_CACHE:
-        with MEMO_BUILD_LOCK:
-            if key not in _UNI_VOCAB_CACHE:
-                from ..operators.text import unigram_em_vocab
+    from ..operators.text import unigram_em_vocab
 
-                _UNI_VOCAB_CACHE[key] = unigram_em_vocab(
-                    table(spark, sf, "documents"), "text"
-                )
-    return _UNI_VOCAB_CACHE[key]
+    return unigram_em_vocab(
+        table(spark, sf, "documents"), "text"
+    )
 
 
 @query("tokenizer_unigram_em")  # rows-only: float Viterbi EM, no SQL form

@@ -222,12 +222,7 @@ def geo_cluster_radius(spark, sf):
         .filter(F.col("c_custkey") < F.col("b_key"))
         .select(F.col("c_custkey").alias("id_a"), F.col("b_key").alias("id_b"))
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        labels = connected_components(pairs)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    labels = connected_components(pairs, parts=4)
     return (
         pts.join(
             labels.withColumnRenamed("id_a", "c_custkey"),

@@ -5,12 +5,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..streaming.pipeline import file_stream, run_available_now, windowed_counts
+from ..streaming.pipeline import (
+    drain,
+    file_stream,
+    run_available_now,
+    windowed_counts,
+)
 from . import (
     EVENTS_RAW_SCHEMA,
     is_path_not_found,
     query,
     read_parquet_or_empty,
+    scoped_conf,
     scratch_dir,
 )
 
@@ -89,12 +95,6 @@ def stream_late_data(spark, sf):
     src, sink, ckpt = f"{base}/src", f"{base}/sink", f"{base}/ckpt"
     t0 = dt.datetime(2024, 1, 1, 10, 0)
 
-    # The demo carries 4 rows; the state store allocates (and checkpoints)
-    # one directory per shuffle partition, so scope the partition count
-    # down for the duration of the drain. At production scale this knob is
-    # sized to the key cardinality, not left at the default.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-
     def write(rows, mtime):
         # numSlices=1 (not coalesce(1)): coalescing a locally-parallelized
         # DataFrame folds default_parallelism Python partition payloads
@@ -111,8 +111,11 @@ def stream_late_data(spark, sf):
             if os.path.getmtime(path) > mtime:
                 os.utime(path, (mtime, mtime))
 
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    # The demo carries 4 rows; the state store allocates (and checkpoints)
+    # one directory per shuffle partition, so scope the partition count
+    # down for the duration of the drain. At production scale this knob is
+    # sized to the key cardinality, not left at the default.
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 2):
         now = time.time()
         write([("a", t0), ("a", t0.replace(minute=30)),
                ("a", dt.datetime(2024, 1, 1, 13, 0))], now - 60)
@@ -140,8 +143,6 @@ def stream_late_data(spark, sf):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(sink).filter(SF.col("ws") == t0)
 
 
@@ -166,15 +167,11 @@ def stream_stateful_count(spark, sf):
     (keys / target-keys-per-partition), bounded by cluster cores."""
     from ..streaming.stateful import running_counts
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 8):
         stream = events_stream(spark, sf)
         emitted = run_available_now(
             running_counts(stream, "user_id"), spark, output_mode="update"
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return emitted.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
 
@@ -360,13 +357,7 @@ def stream_upsert_sink(spark, sf):
         merged.write.mode("overwrite").parquet(staged)
         s.read.parquet(staged).write.mode("overwrite").parquet(target)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, upsert, ckpt)
     return spark.read.parquet(target).select(
         "user_id",
         F.col("event_type").alias("last_event_type"),
@@ -432,13 +423,7 @@ def stream_dedup_near(spark, sf):
         )
         pairs.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, probe, ckpt)
     return (
         spark.read.option("recursiveFileLookup", "true")
         .schema("id_new bigint, id_base bigint, jaccard double")
@@ -468,9 +453,6 @@ def stream_stream_join(spark, sf):
     cardinality (see stream_stateful_count's sizing rule)."""
     from pyspark.sql import functions as SF
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-
     def side(label, event_type):
         s = events_stream(spark, sf)
         return (
@@ -483,7 +465,7 @@ def stream_stream_join(spark, sf):
             .withWatermark(f"{label}_ts", "1 hour")
         )
 
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 8):
         views, purchases = side("view", "view"), side("purchase", "purchase")
         joined = views.join(
             purchases,
@@ -495,8 +477,6 @@ def stream_stream_join(spark, sf):
             "inner",
         )
         out = run_available_now(joined, spark, output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return out.select(
         SF.col("view_id"),
         SF.col("purchase_id"),
@@ -562,9 +542,7 @@ def stream_ema(spark, sf):
     from ..streaming.pipeline import run_available_now
     from ..streaming.stateful import running_ema
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", 8):
         stream = events_stream(spark, sf).select(
             "user_id", "event_id",
             F.floor(F.col("value") * 100).cast("long").alias("cents"),
@@ -574,8 +552,6 @@ def stream_ema(spark, sf):
             spark,
             output_mode="update",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return emitted.select("user_id", "event_id", "ema_cents")
 
 
@@ -617,13 +593,7 @@ def stream_similarity_topk(spark, sf):
         )
         out.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, probe, ckpt)
     drained = (
         spark.read.option("recursiveFileLookup", "true")
         .schema(
@@ -705,13 +675,7 @@ def stream_substring_dedup(spark, sf):
         )
         spans.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, probe, ckpt)
     return (
         spark.read.option("recursiveFileLookup", "true")
         .schema(
@@ -770,13 +734,7 @@ def stream_heavy_hitters(spark, sf):
             "overwrite"
         ).parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, sketch_batch, ckpt)
     merged = (
         spark.read.option("recursiveFileLookup", "true")
         .schema("token string, mg_count bigint")
@@ -845,13 +803,7 @@ def stream_search_bm25(spark, sf):
         )
         out.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, probe, ckpt)
     drained = (
         spark.read.option("recursiveFileLookup", "true")
         .schema("qid bigint, doc_id bigint, bm25 double, rnk int")
@@ -918,21 +870,11 @@ def stream_search_bm25_append(spark, sf):
                 f"{target}/{kind}/b{batch_id}"
             )
 
-    q = (
-        stream.writeStream.foreachBatch(land_partials)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     # Neither the standing BASE postings nor the ledger's batch-leg
     # partials are read by the drain — both tokenize only static corpus
     # slices — so they materialize CONCURRENTLY with the stream
     # (optimization round 12, guide §2.6; values unchanged, the
     # exceptAll diff compares the same two result sets).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     def _base_leg():
         return tuple(
             df.localCheckpoint()
@@ -949,12 +891,9 @@ def stream_search_bm25_append(spark, sf):
             )
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        base_fut = pool.submit(inheritable_thread_target(_base_leg))
-        new_fut = pool.submit(inheritable_thread_target(_new_leg))
-        q.awaitTermination()
-        base = base_fut.result()
-        new_partials = new_fut.result()
+    base, new_partials = drain(
+        stream, land_partials, ckpt, alongside=(_base_leg, _new_leg)
+    )
 
     def drained(kind, schema):
         return (
@@ -1044,13 +983,7 @@ def stream_comoment_corr(spark, sf):
         )
         part.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(reduce_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, reduce_batch, ckpt)
     partials = (
         spark.read.option("recursiveFileLookup", "true")
         .schema(
@@ -1130,13 +1063,7 @@ def stream_quality_quarantine(spark, sf):
         finally:
             routed.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, route, ckpt)
     _back_schema = (
         "event_id bigint, event_type string, value double, gate string"
     )
@@ -1212,13 +1139,7 @@ def stream_expectation_gate(spark, sf):
         )
         part.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, gate, ckpt)
     partials = (
         spark.read.option("recursiveFileLookup", "true")
         .schema(
@@ -1305,26 +1226,9 @@ def stream_append_retrain(spark, sf):
             batch_df, stale_centroids, assign_spill=IVF_SPILL
         ).write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(append)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    [stale_assigned] = drain(
+        stream, append, ckpt, alongside=(stale_assigned.localCheckpoint,)
     )
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        assigned_fut = pool.submit(
-            inheritable_thread_target(
-                lambda: stale_assigned.localCheckpoint()
-            )
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            stale_assigned = assigned_fut.result()
     _assign_schema = "vec_id bigint, cell bigint, vector array<double>"
     # Empty-source guard (the stream_quality_quarantine convention): an
     # all-empty drain writes no batch dirs, and the read of the absent
@@ -1381,13 +1285,7 @@ def stream_semantic_dedup(spark, sf):
             threshold=0.40, dim=64,
         ).write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, probe, ckpt)
     _pair_schema = "id_new bigint, id_base bigint, cosine double"
     return read_parquet_or_empty(spark, _pair_schema, target, recursive=True)
 
@@ -1502,13 +1400,7 @@ def stream_dedup_phash(spark, sf):
         )
         pairs.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, probe, ckpt)
     return (
         spark.read.option("recursiveFileLookup", "true")
         .schema("id_new bigint, id_base bigint, hamming bigint")
@@ -1577,13 +1469,7 @@ def stream_quality_classifier(spark, sf):
         )
         cells.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, score, ckpt)
     return (
         spark.read.option("recursiveFileLookup", "true")
         .schema("pred_keep int, gopher_keep int, n_docs bigint")
@@ -1674,29 +1560,17 @@ def stream_clusters_incremental(spark, sf):
             base_shingles=sh_base,
         ).write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     # The STANDING assignment reads only the memoized base pair set —
     # independent of the drain — so its checkpointed CC materializes
     # CONCURRENTLY with the stream (optimization round 12, guide §2.6).
-    # The former session-global shuffle-partition override rides into
-    # connected_components via parts= (labels are partition-layout-
-    # invariant by the CC contract), so the drain never observes a
-    # mutated session conf.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    pairs = shared_jaccard_pairs(spark, sf)
-    base_pairs = pairs.filter(
-        (F.col("id_a") % 5 != 0) & (F.col("id_b") % 5 != 0)
-    )
-
+    # The shuffle-partition count rides into connected_components via
+    # parts= (labels are partition-layout-invariant by the CC contract),
+    # so the drain never observes a mutated session conf.
     def _standing_leg():
+        pairs = shared_jaccard_pairs(spark, sf)
+        base_pairs = pairs.filter(
+            (F.col("id_a") % 5 != 0) & (F.col("id_b") % 5 != 0)
+        )
         return (
             D.connected_components(
                 base_pairs.select("id_a", "id_b"), parts=4
@@ -1708,10 +1582,7 @@ def stream_clusters_incremental(spark, sf):
             .localCheckpoint()
         )
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        standing_fut = pool.submit(inheritable_thread_target(_standing_leg))
-        q.awaitTermination()
-        standing = standing_fut.result()
+    [standing] = drain(stream, probe, ckpt, alongside=(_standing_leg,))
     drained = read_parquet_or_empty(
         spark, "id_new bigint, id_base bigint, jaccard double",
         target, recursive=True,
@@ -1829,13 +1700,7 @@ def stream_audio_fingerprint(spark, sf):
         )
         pairs.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, probe, ckpt)
     return read_parquet_or_empty(
         spark, "id_new bigint, id_base bigint, fp_hash bigint",
         target, recursive=True,
@@ -1910,13 +1775,7 @@ def stream_kmv_sketch(spark, sf):
             "o_orderpriority", F.explode("kmin").alias("u")
         ).write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(partial)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, partial, ckpt)
     drained = read_parquet_or_empty(
         spark, "o_orderpriority string, u bigint", target, recursive=True
     )
@@ -2013,13 +1872,7 @@ def stream_geo_fence(spark, sf):
             "overwrite"
         ).parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(fence)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, fence, ckpt)
     return read_parquet_or_empty(
         spark, "polygon_id bigint, event_id bigint", target, recursive=True
     )
@@ -2104,13 +1957,7 @@ def stream_forget_cascade(spark, sf):
         )
         row.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(audit)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, audit, ckpt)
     drained = read_parquet_or_empty(
         spark, "table_name string, n_purged bigint", target, recursive=True
     ).groupBy("table_name").agg(F.sum("n_purged").alias("n_purged"))
@@ -2195,13 +2042,7 @@ def stream_artifact_vacuum(spark, sf):
     def land(batch_df, batch_id):
         batch_df.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, land, ckpt)
 
     def n_files():
         return len(
@@ -2310,33 +2151,15 @@ def stream_eval_contamination(spark, sf):
             f"{target}/b{batch_id}"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     # The ledger's batch leg reads only the static corpus and the
     # standing eval grams — independent of the drain — so it
     # materializes CONCURRENTLY with the stream (optimization round 12,
     # guide §2.6, the stream_knn_graph_* shape; values unchanged, the
     # exceptAll diff compares the same two result sets).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     def _batch_leg():
         return gate(docs).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        batch_fut = pool.submit(inheritable_thread_target(_batch_leg))
-        try:
-            q.awaitTermination()
-        finally:
-            # Surface the first error promptly: if the stream dies, the
-            # batch future is drained here (ADVICE r11) so its own
-            # failure cannot queue silently behind the stream's.
-            batch = batch_fut.result()
+    [batch] = drain(stream, land, ckpt, alongside=(_batch_leg,))
     drained = read_parquet_or_empty(
         spark, "doc_id bigint, n_eval_hits bigint", target, recursive=True
     )
@@ -2403,13 +2226,7 @@ def stream_artifact_forget(spark, sf):
     def land(batch_df, batch_id):
         batch_df.write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, land, ckpt)
 
     forget = docs.filter(F.col("doc_id") % 53 == 0).select("doc_id")
     # Capture b1's ORIGINAL content (incl. soon-to-be-purged rows) —
@@ -2490,36 +2307,18 @@ def stream_knn_graph_probe(spark, sf):
             k=5, nprobe=4, hops=2, entry_cap=10,
         ).write.mode("overwrite").parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     # The ledger's batch leg reads only the standing graph/cells and the
     # static new-vector table — independent of the drain — so it
     # materializes CONCURRENTLY with the stream (optimization round 11,
     # guide §2.6, the stream_knn_graph_append shape; values unchanged,
     # the full_outer diff still compares the same two result sets).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     def _batch_leg():
         return S.cosine_topk_graph(
             base, emb.filter(F.col("vec_id") % 5 == 0), graph=graph,
             cells=cells, k=5, nprobe=4, hops=2, entry_cap=10,
         ).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        batch_fut = pool.submit(inheritable_thread_target(_batch_leg))
-        try:
-            q.awaitTermination()
-        finally:
-            # Drain the future even when the stream raises (ADVICE
-            # r11): the first error surfaces promptly instead of
-            # queueing behind the pool's __exit__ wait.
-            batch_mode = batch_fut.result()
+    [batch_mode] = drain(stream, probe, ckpt, alongside=(_batch_leg,))
     drained = read_parquet_or_empty(
         spark,
         "query_id bigint, neighbor_id bigint, cosine double, rnk int",
@@ -2613,22 +2412,12 @@ def stream_knn_graph_append(spark, sf):
             "overwrite"
         ).parquet(f"{target}/b{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(land_edges)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     # The ledger's BATCH leg reads only the standing graph/cells and
     # the static new-vector table — independent of the drain — so its
     # one-shot search materializes CONCURRENTLY with the stream
     # (optimization round 11, guide §2.6: overlap independent eager
     # work; values unchanged, the full_outer diff still compares the
     # same two edge sets).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     def _batch_leg():
         return S.cosine_topk_graph(
             base, new_all, graph=graph, cells=cells,
@@ -2638,15 +2427,7 @@ def stream_knn_graph_append(spark, sf):
             F.col("neighbor_id").alias("dst"), "cosine",
         ).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        batch_fut = pool.submit(inheritable_thread_target(_batch_leg))
-        try:
-            q.awaitTermination()
-        finally:
-            # Drain the future even when the stream raises (ADVICE
-            # r11): the first error surfaces promptly instead of
-            # queueing behind the pool's __exit__ wait.
-            batch_out = batch_fut.result()
+    [batch_out] = drain(stream, land_edges, ckpt, alongside=(_batch_leg,))
     drained = read_parquet_or_empty(
         spark, "query_id bigint, neighbor_id bigint, cosine double",
         target, recursive=True,

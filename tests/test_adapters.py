@@ -5,6 +5,7 @@ round-tripping against the synthetic tables."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -120,6 +121,30 @@ def test_sub_dirs_split(spark, tmp_path):
     assert sorted(streams) == ["t/1995", "t/1996"]
     for s in streams.values():
         assert s.df.count() > 0
+
+
+def test_sub_dirs_missing_root_raises(spark, tmp_path):
+    """A sub_dirs load from a root that does not exist fails, naming the
+    verb and the URI (it used to return no streams, so the copy saved
+    nothing and still succeeded)."""
+    base = str(tmp_path / "absent")
+    with pytest.raises(
+        FileNotFoundError,
+        match=f"'hadoopColumnar'.*{re.escape(base)} does not exist",
+    ):
+        load_one(spark, "hadoopColumnar", base, params={"sub_dirs": True})
+
+
+def test_sub_dirs_root_without_subdirs_raises(spark, tmp_path):
+    """A sub_dirs root holding only files has no sub-stream to copy."""
+    base = tmp_path / "flat"
+    base.mkdir()
+    (base / "part-0.tsv").write_text("id\n1\n")
+    with pytest.raises(
+        FileNotFoundError,
+        match=f"'hadoopText'.*{re.escape(str(base))} has no sub-directories",
+    ):
+        load_one(spark, "hadoopText", str(base), params={"sub_dirs": True})
 
 
 def test_part_count_partitioning(spark, nation, tmp_path):

@@ -4,11 +4,17 @@ shapes that decide whether an operator survives 100 TB."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMALL
 from datacooker_dist_spark.operators.relational import salted_join
+from datacooker_dist_spark.suite import memo, scoped_conf
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -629,3 +635,97 @@ def test_merge_postings_fold_order_invariant(spark):
             gs = merged[2].collect()[0]
             es = full[2].collect()[0]
             assert (gs.nd, gs.tt) == (es.nd, es.tt), parts
+
+
+def _fake_session(app_id):
+    """Stands in for a SparkSession: a memo key reads only the app id."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def _run_threads(*targets):
+    errors = []
+
+    def guard(fn):
+        try:
+            fn()
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=guard, args=(t,)) for t in targets]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+
+
+def test_memo_concurrent_first_touches_build_once():
+    builds, seen = [], []
+    start = threading.Barrier(16, timeout=10)
+
+    @memo
+    def shared_thing(spark, sf):
+        builds.append(sf)
+        time.sleep(0.05)
+        return object()
+
+    s = _fake_session("memo-build-once")
+
+    def touch():
+        start.wait()
+        seen.append(shared_thing(s, "sf"))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        _run_threads(*[touch] * 16)
+    finally:
+        sys.setswitchinterval(interval)
+    assert builds == ["sf"]
+    assert len(seen) == 16 and all(v is seen[0] for v in seen)
+
+
+def test_memo_builds_different_keys_at_the_same_time():
+    """Each build waits for the other to start: a lock shared by all
+    keys would let only one in, and the barrier would time out."""
+    both_building = threading.Barrier(2, timeout=10)
+
+    @memo
+    def shared_thing(spark, sf):
+        both_building.wait()
+        return sf
+
+    s = _fake_session("memo-parallel-keys")
+    out = {}
+    _run_threads(
+        lambda: out.setdefault("x", shared_thing(s, "x")),
+        lambda: out.setdefault("y", shared_thing(s, "y")),
+    )
+    assert out == {"x": "x", "y": "y"}
+
+
+def test_memo_default_and_explicit_args_share_one_entry():
+    builds = []
+
+    @memo
+    def shared_index(spark, sf, dim=64, m=32):
+        builds.append((sf, dim, m))
+        return object()
+
+    s = _fake_session("memo-defaults")
+    first = shared_index(s, "sf")
+    assert shared_index(s, "sf", 64, 32) is first
+    assert shared_index(s, "sf", m=32) is first
+    assert builds == [("sf", 64, 32)]
+    assert shared_index(s, "sf", 32) is not first
+
+
+def test_scoped_conf_restores_previous_value_after_exception(spark):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with pytest.raises(RuntimeError, match="inside the scope"):
+        with scoped_conf(spark, key, 3):
+            assert spark.conf.get(key) == "3"
+            raise RuntimeError("inside the scope")
+    assert spark.conf.get(key) == before

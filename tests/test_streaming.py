@@ -5,10 +5,13 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from datacooker_dist_spark.streaming.pipeline import (
+    drain,
     file_stream,
     run_available_now,
     windowed_counts,
@@ -601,3 +604,44 @@ def test_read_dedupes_replayed_batch_against_compacted(spark, tmp_path):
     vacuum_batch_artifacts(spark, target, watermark=2)
     _land_batch(spark, target, 1, [(10 + i, "x") for i in range(3)])  # replay
     assert read_batch_artifacts(spark, target).count() == 9
+
+
+def _one_batch_stream(spark, tmp_path):
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, [("a", dt.datetime(2024, 1, 1, 10, 0))])
+    return file_stream(spark, src, "k string, ts timestamp")
+
+
+def test_drain_raises_stream_error_before_leg_error(spark, tmp_path):
+    """When the stream's batch function and an alongside leg both fail,
+    the stream's own error is the one raised, not the leg's."""
+    def batch_fn(df, batch_id):
+        raise ValueError("stream boom")
+
+    def leg():
+        raise RuntimeError("leg boom")
+
+    with pytest.raises(Exception, match="stream boom") as exc:
+        drain(
+            _one_batch_stream(spark, tmp_path), batch_fn,
+            str(tmp_path / "ckpt"), alongside=(leg,),
+        )
+    assert "leg boom" not in str(exc.value)
+
+
+def test_drain_returns_leg_results_in_order(spark, tmp_path):
+    """Leg results come back in ``alongside`` order, whichever leg ends
+    first, and the stream's batches all ran."""
+    rows = []
+
+    def slow():
+        time.sleep(0.3)
+        return "first"
+
+    out = drain(
+        _one_batch_stream(spark, tmp_path),
+        lambda df, batch_id: rows.append(df.count()),
+        str(tmp_path / "ckpt"), alongside=(slow, lambda: "second"),
+    )
+    assert out == ["first", "second"]
+    assert rows == [1]
