@@ -631,11 +631,11 @@ def connected_components(
     # ``parts`` lets a caller with a small known edge set pick the first
     # pass's width directly instead of mutating the session's
     # shuffle-partition conf around the call (ADVICE r04: the conf
-    # mutation raced under concurrent query building).
-    parts = max(
-        min(parts if parts is not None else df.rdd.getNumPartitions(), 64),
-        1,
-    )
+    # mutation raced under concurrent query building). It is capped at
+    # the input's own count: coalesce cannot widen, so a wider ``parts``
+    # would only add checkpointed passes over the same partitions.
+    n = df.rdd.getNumPartitions()
+    parts = max(min(n if parts is None else parts, n, 64), 1)
     fanin = 8
     stage = final_stage
     stop_parts = fanin if stage == "distributed" else 1

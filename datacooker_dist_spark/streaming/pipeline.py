@@ -59,27 +59,26 @@ def drain(stream: DataFrame, batch_fn, ckpt: str, *, alongside=()) -> list:
     """Drain a bounded stream through ``foreachBatch(batch_fn)`` with its
     checkpoint at ``ckpt`` and the ``availableNow`` trigger.
 
-    Each callable in ``alongside`` runs on its own thread (wrapped in
-    ``inheritable_thread_target``, so job groups carry over) while the
-    stream drains; their results come back in order once both the stream
-    and every leg are done. If the stream fails, its error is raised
-    first; a leg's error surfaces only after a successful drain."""
-    from concurrent.futures import ThreadPoolExecutor
+    Each callable in ``alongside`` runs on its own thread while the
+    stream drains (:func:`..session.concurrently`, with the stream as
+    leg 0, so it also starts under the conf lock); their results come
+    back in order once both the stream and every leg are done. If the
+    stream fails, its error is raised first; a leg's error surfaces only
+    after a successful drain. ``batch_fn`` counts as a leg, so it may
+    not enter ``scoped_conf``."""
+    from ..session import as_leg, concurrently
 
-    from pyspark import inheritable_thread_target
+    def run_stream():
+        (
+            stream.writeStream.foreachBatch(as_leg(batch_fn))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    with ThreadPoolExecutor(max_workers=max(len(alongside), 1)) as pool:
-        legs = [pool.submit(inheritable_thread_target(f)) for f in alongside]
-        # A failed stream raises here; leaving the block still waits for
-        # the legs, and their results (errors included) go unread.
-        q.awaitTermination()
-    return [leg.result() for leg in legs]
+    legs = [run_stream, *alongside]
+    return concurrently(stream.sparkSession, legs, len(legs))[1:]
 
 
 def file_stream(spark: SparkSession, path: str, schema) -> DataFrame:

@@ -11,12 +11,17 @@ import functools
 import inspect
 import threading
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf  # noqa: F401  (re-exported)
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+
+#: Oracle of the self-checking queries that compare a result against its
+#: own rebuild and report the mismatch count.
+NO_MISMATCHES = "SELECT CAST(0 AS BIGINT) AS mismatches, TRUE AS nonempty"
 
 
 def query(name: str, oracle: str | None = None):
@@ -85,24 +90,6 @@ def memo(fn):
         return _MEMO[key]
 
     return getter
-
-
-@contextmanager
-def scoped_conf(spark: SparkSession, key: str, value):
-    """Set the session conf ``key`` to ``value`` for the ``with`` block
-    and restore the previous value on exit, also when the block raises.
-    Only jobs that EXECUTE inside the block see the value, so wrap eager
-    work (collect, localCheckpoint, a drained stream), not a lazy plan.
-
-    Takes no lock: the conf is session-wide, so jobs another thread runs
-    meanwhile see the change too. This is the one place to make that
-    thread-safe."""
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(value))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 @memo

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..session import concurrently
 from . import query, scratch_dir, table
 
 
@@ -2117,19 +2118,15 @@ def privacy_forget_index(spark, sf):
     Optimization round 11 (guide §2.6): the eight artifact purges are
     mutually independent chains of eager work (a parquet write + cold
     read each, plus the golden section's checkpointed CC) that used to
-    run strictly sequentially on the driver; they now build in a small
-    thread pool after the session memos they read are pre-warmed
-    sequentially. The golden section's session-global
+    run strictly sequentially on the driver; they now build as
+    :func:`..session.concurrently` legs after the session memos they
+    read are pre-warmed sequentially. The golden section's session-global
     ``spark.sql.shuffle.partitions`` override is gone — the partition
     count rides into :func:`connected_components` via its ``parts``
     argument instead, so concurrent builders never see a mutated
     session conf (labels are partition-layout-invariant by the CC
     contract; everything else under that conf was perf-only). Ledger
     values unchanged; union order stays the fixed builder order."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     from ..operators import dedup as D
     from ..operators import similarity as S
     from ..operators.retrieval import build_postings
@@ -2146,7 +2143,8 @@ def privacy_forget_index(spark, sf):
     )
     from .llm_ext import golden_rollup
 
-    # Pre-warm the unlocked session memos before any concurrency.
+    # Pre-warm the session memos on this thread: a memo build that holds
+    # a conf scope may not run inside a leg.
     shared_shingles(spark, sf)
     shared_kgram_rows(spark, sf, k=10)
     shared_pq_index(spark, sf)
@@ -2470,23 +2468,18 @@ def privacy_forget_index(spark, sf):
         _p_bm25, _p_lsh, _p_gram, _p_pq, _p_sq8, _p_ivf, _p_graph,
         _p_golden,
     ]
-    # Wrap on the MAIN thread: inheritable_thread_target snapshots the
-    # wrapping thread's JVM-local properties (job group/description).
     # Width 3 per guide §2.6 (optimization round 12): "2-3 jobs in
     # flight is plenty" — the round-11 8-wide pools were the only
     # driver-measured regressions at 32 cores (concurrent jobs fighting
     # for task slots); 3 keeps the overlap without the fight.
-    # Each purge section's ledger rows checkpoint INSIDE the pooled
-    # task (optimization round 12 — the engine_scorecard shape): the
+    # Each purge section's ledger rows checkpoint INSIDE its leg
+    # (optimization round 12 — the engine_scorecard shape): the
     # grading aggregates used to execute in the returned union's noop
-    # pass; pooled they overlap with the other sections' eager work.
+    # pass; as legs they overlap with the other sections' eager work.
     # Union order stays the fixed builder order; values unchanged.
-    wrapped = [
-        inheritable_thread_target(lambda f=f: f().localCheckpoint())
-        for f in builders
-    ]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        rows = list(pool.map(lambda w: w(), wrapped))
+    rows = concurrently(
+        spark, [lambda f=f: f().localCheckpoint() for f in builders], 3
+    )
 
     out = rows[0]
     for r in rows[1:]:

@@ -8,7 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import dsum, dsum_sql
-from . import query, scratch_dir, table
+from . import ORACLES, query, scratch_dir, table
 
 
 @query(
@@ -673,10 +673,7 @@ def compact_small_files(spark, sf):
     return spark.read.parquet(compacted)
 
 
-@query(
-    "adapter_xml_roundtrip",
-    oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
-)
+@query("adapter_xml_roundtrip", oracle=ORACLES["adapter_csv_roundtrip"])
 def adapter_xml_roundtrip(spark, sf):
     """XML round-trip through the adapter registry (Spark 4 native XML
     source): nation flows out as <rows><row>...</row></rows> documents and
@@ -799,12 +796,7 @@ def adapter_schema_evolution(spark, sf):
     )
 
 
-@query(
-    "adapter_custom_sink",
-    oracle="""
-    SELECT n_nationkey, n_name, n_regionkey FROM nation
-    """,
-)
+@query("adapter_custom_sink", oracle=ORACLES["adapter_csv_roundtrip"])
 def adapter_custom_sink(spark, sf):
     """Custom Python DataSource SINK through the full write path — the
     output half of the extensibility story (A21/A6): executor tasks
@@ -1360,18 +1352,7 @@ def sketch_quantile_grid(spark, sf):
                           buckets=4096)
 
 
-@query(
-    "sketch_roundtrip",
-    oracle="""
-    WITH tok AS (
-      SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
-      FROM documents),
-    cnt AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS exact_n
-            FROM tok WHERE token <> '' GROUP BY token)
-    SELECT token, exact_n, TRUE AS cms_ge_exact
-    FROM cnt ORDER BY exact_n DESC, token LIMIT 10
-    """,
-)
+@query("sketch_roundtrip", oracle=ORACLES["sketch_countmin_heavyhitters"])
 def sketch_roundtrip(spark, sf):
     """MATERIALIZED sketch lifecycle — the operational contract behind
     "sketches are what you KEEP at 100 TB": per-SOURCE count-min

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from . import memo, query, scoped_conf, table
+from . import ORACLES, memo, query, scoped_conf, table
 from ..operators import similarity as S
 
 # ---------------------------------------------------------------------------
@@ -871,7 +871,7 @@ def er_match_classify(spark, sf):
     )
 
 
-@query("er_params_roundtrip", oracle=er_classify_oracle())
+@query("er_params_roundtrip", oracle=ORACLES["er_match_classify"])
 def er_params_roundtrip(spark, sf):
     """Model-artifact ROUND-TRIP for the EM-trained Fellegi–Sunter
     parameters (round 9 — the ``quality_classifier_roundtrip`` /
@@ -1002,18 +1002,7 @@ def er_resolve_golden(spark, sf):
     )
 
 
-@query(
-    "er_fellegi_incremental",
-    oracle=f"""
-    WITH {_er_oracle_ctes()}
-    SELECT UNNEST({_ER_PARAM_NAMES!r}) AS param,
-           UNNEST([CAST(m1 AS DOUBLE), CAST(m2 AS DOUBLE),
-                   CAST(m3 AS DOUBLE), CAST(u1 AS DOUBLE),
-                   CAST(u2 AS DOUBLE), CAST(u3 AS DOUBLE),
-                   CAST(lam AS DOUBLE)]) AS value
-    FROM erpar{_ER_ITERS}
-    """,
-)
+@query("er_fellegi_incremental", oracle=ORACLES["er_fellegi_sunter_em"])
 def er_fellegi_incremental(spark, sf):
     """Incremental Fellegi–Sunter refit — the family's third form
     (batch + incremental + streaming, the suite-wide dedup symmetry):

@@ -23,8 +23,8 @@ from ..operators import dedup as D
 from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as T
-from ..session import default_parallelism, fan_out
-from . import memo, query, scoped_conf, table
+from ..session import concurrently, default_parallelism, fan_out
+from . import NO_MISMATCHES, ORACLES, memo, query, scoped_conf, table
 
 # DuckDB twins of the engine's tokenization / shingling conventions
 # (operators.dedup.tokens_col / shingles_col).
@@ -491,18 +491,7 @@ def dedup_incremental(spark, sf):
     )
 
 
-@query(
-    "dedup_index_roundtrip",
-    oracle=f"""
-    WITH sh AS (SELECT doc_id, {SQL_SHINGLES} AS s FROM documents)
-    SELECT n.doc_id AS id_new, b.doc_id AS id_base,
-           len(list_intersect(n.s, b.s))
-             / (len(n.s) + len(b.s) - len(list_intersect(n.s, b.s))) AS jaccard
-    FROM sh n JOIN sh b ON n.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-    WHERE len(list_intersect(n.s, b.s))
-            / (len(n.s) + len(b.s) - len(list_intersect(n.s, b.s))) >= 0.8
-    """,
-)
+@query("dedup_index_roundtrip", oracle=ORACLES["dedup_incremental"])
 def dedup_index_roundtrip(spark, sf):
     """MATERIALIZED-index incremental near-dedup (VERDICT r03 task 4):
     the corpus's LSH band index is written to parquet through the
@@ -663,25 +652,7 @@ def dedup_substring_incremental(spark, sf):
 
 @query(
     "dedup_substring_index_roundtrip",
-    oracle=f"""
-    {_SQL_KGRAMS},
-    keep AS (SELECT gram FROM g WHERE doc_id % 5 <> 0 GROUP BY gram
-             HAVING COUNT(DISTINCT doc_id) <= 64),
-    m AS (SELECT DISTINCT n.doc_id AS id_new, b.doc_id AS id_base,
-                 n.pos AS pos_new
-          FROM g n JOIN g b USING (gram)
-          WHERE n.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-            AND gram IN (SELECT gram FROM keep)),
-    isl AS (SELECT id_new, id_base, pos_new,
-                   pos_new - ROW_NUMBER() OVER (PARTITION BY id_new, id_base
-                                                ORDER BY pos_new) AS grp
-            FROM m),
-    runs AS (SELECT id_new, id_base, COUNT(*) AS run
-             FROM isl GROUP BY id_new, id_base, grp)
-    SELECT id_new, id_base, CAST(SUM(run) AS BIGINT) AS n_shared_windows,
-           CAST(MAX(run) + 9 AS BIGINT) AS longest_span_tokens
-    FROM runs GROUP BY id_new, id_base
-    """,
+    oracle=ORACLES["dedup_substring_incremental"],
 )
 def dedup_substring_index_roundtrip(spark, sf):
     """MATERIALIZED substring-index probe: the corpus gram index
@@ -1532,10 +1503,7 @@ def similarity_topk_ivfpq_residual(spark, sf):
     )
 
 
-@query(
-    "similarity_pq_index_roundtrip",
-    oracle="SELECT CAST(0 AS BIGINT) AS mismatches, TRUE AS nonempty",
-)
+@query("similarity_pq_index_roundtrip", oracle=NO_MISMATCHES)
 def similarity_pq_index_roundtrip(spark, sf):
     """PQ index PERSISTENCE proof (VERDICT r03 task 4): the session's
     codebooks + encoded code table are written to parquet through the
@@ -1695,11 +1663,7 @@ def similarity_index_append(spark, sf):
 
 @query(
     "similarity_index_append_residual",
-    oracle="""
-    SELECT CAST(0 AS BIGINT) AS mismatches,
-           (SELECT COUNT(*) FROM embeddings) AS n_appended,
-           TRUE AS nonempty
-    """,
+    oracle=ORACLES["similarity_index_append"],
 )
 def similarity_index_append_residual(spark, sf):
     """APPEND path for the RESIDUAL IVF-PQ index (r06 — closes the
@@ -3315,10 +3279,6 @@ def dedup_blocking_report(spark, sf):
     # engine_scorecard pooling pattern): build them concurrently after
     # the session memos above are warm. Checkpointed values identical;
     # only job submission overlaps.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     ckpt_builders = [
         lambda: D.snm_candidates(
             docs, window=4, key_len=64
@@ -3335,11 +3295,7 @@ def dedup_blocking_report(spark, sf):
     # was driver-measured slower at 32 cores than 8 (0.74×) — four
     # concurrent checkpoint jobs fight for task slots; two keep the
     # tail back-filled without the contention.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        c1, c2, dh_cand, truth_p = pool.map(
-            lambda w: w(),
-            [inheritable_thread_target(f) for f in ckpt_builders],
-        )
+    c1, c2, dh_cand, truth_p = concurrently(spark, ckpt_builders, 2)
     afp = shared_afp_hashes(spark, sf)
     afp_a = afp.select(F.col("media_id").alias("_ida"),
                        F.col("g").alias("_g1"),
@@ -3424,14 +3380,7 @@ def dedup_blocking_report(spark, sf):
     # the driver-measured cost was ~6 s; pooled at the guide's §2.6
     # width they overlap instead). Union order stays the fixed list
     # order; values unchanged.
-    from pyspark import inheritable_thread_target
-
-    wrapped = [
-        inheritable_thread_target(lambda d=d: d.localCheckpoint())
-        for d in parts
-    ]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        parts = list(pool.map(lambda w: w(), wrapped))
+    parts = concurrently(spark, [d.localCheckpoint for d in parts], 3)
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
@@ -3528,18 +3477,15 @@ def engine_scorecard(spark, sf):
     EAGER work (localCheckpoints, the two parquet model round-trips,
     the vacuum's write/count/vacuum ladder) used to run one after
     another on the driver — 427 driver-synchronized jobs end to end.
-    Each part now builds inside a small thread pool
-    (``inheritable_thread_target`` so job-group attribution survives);
-    the session memos every part reads are pre-warmed SEQUENTIALLY
-    first (in bench order they are already built, so the pre-warm is
-    free; the getters are ``@memo`` functions, which lock per key, so a
-    concurrent first touch builds once by construction, not convention). Values are
+    Each part now builds as a :func:`..session.concurrently` leg; the
+    session memos every part reads are pre-warmed SEQUENTIALLY first on
+    the caller's thread (in bench order they are already built, so the
+    pre-warm is free). The pre-warm has to stay: memo builds that hold a
+    conf scope (the AQE-off collects in ``shared_quality_classifier``
+    and ``shared_er_params``) may not run inside a leg. Values are
     unchanged: parts share no mutable state, each scratch dir is
     unique, and the union order stays the fixed builder order."""
-    from concurrent.futures import ThreadPoolExecutor
     from functools import reduce
-
-    from pyspark import inheritable_thread_target
 
     from ..operators.sketches import kmin_merge, kmin_values
     from .embml import shared_er_params
@@ -3550,8 +3496,9 @@ def engine_scorecard(spark, sf):
 
     hitcounts, row = _sc_hitcounts, _sc_row
 
-    # Pre-warm every session memo the parts read (unlocked dicts must
-    # not be first-touched concurrently; memoized = free in bench order).
+    # Pre-warm every session memo the parts read on this thread: a memo
+    # build that holds a conf scope may not run inside a leg (memoized =
+    # free in bench order).
     shared_dhash_hashes(spark, sf)
     shared_afp_hashes(spark, sf)
     shared_cosine_truth(spark, sf)
@@ -4119,27 +4066,22 @@ def engine_scorecard(spark, sf):
         _p_qcls_roundtrip, _p_dsir, _p_kmv, _p_er, _p_cdc, _p_substring,
         _p_graph_recall, _p_graph_append, _p_graph_forget, _p_vacuum,
     ]
-    # Wrap on the MAIN thread: inheritable_thread_target snapshots the
-    # wrapping thread's JVM-local properties (job group/description).
-    # Pool width 3, not 8 (optimization round 12, guide §2.6: "2-3 jobs
+    # Width 3, not 8 (optimization round 12, guide §2.6: "2-3 jobs
     # in flight is plenty: enough to fill the tail, not so many that
     # they fight for executors"). The round-11 8-wide pool was the only
     # driver-measured regression at 32 cores (0.44×, faster at 8 cores
     # than 32 — concurrent jobs contending for task slots + the py4j
     # gateway); 3 keeps the back-fill overlap and removes the fight.
-    # Each section's one-row verdict frame checkpoints INSIDE its pooled
-    # task (optimization round 12): the grading joins/aggregates that
+    # Each section's one-row verdict frame checkpoints INSIDE its leg
+    # (optimization round 12): the grading joins/aggregates that
     # used to execute in the returned union's noop pass ride the
-    # already-running pool's tail instead. (This differs from the
+    # already-running legs' tail instead. (This differs from the
     # rejected recall-report experiment, where a pool was ADDED just to
-    # checkpoint lazy union legs — here the eager pool exists anyway.)
+    # checkpoint lazy union legs — here the eager legs exist anyway.)
     # Union order stays the fixed builder order; values unchanged.
-    wrapped = [
-        inheritable_thread_target(lambda f=f: f().localCheckpoint())
-        for f in builders
-    ]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        parts = list(pool.map(lambda w: w(), wrapped))
+    parts = concurrently(
+        spark, [lambda f=f: f().localCheckpoint() for f in builders], 3
+    )
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 

@@ -9,7 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
-from . import query, scoped_conf, table
+from . import ORACLES, query, scoped_conf, table
 
 # The word-soup corpus carries no real PII; a synthetic column with planted
 # identifiers exercises the scrubbers deterministically.
@@ -170,31 +170,7 @@ def dedup_clusters(spark, sf):
     ).select(F.col("id_a").alias("doc_id"), "cluster_id")
 
 
-@query(
-    "dedup_clusters_incremental",
-    oracle="""
-    WITH RECURSIVE
-    sh AS (SELECT doc_id,
-           list_distinct(list_transform(
-               range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '\\s+')) - 2, 1) + 1),
-               i -> array_to_string((regexp_split_to_array(lower(trim(text)), '\\s+'))[i:i+2], ' ')))
-           AS s FROM documents),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s))
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.8),
-    edges AS (SELECT id_a AS s, id_b AS t FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    reach AS (
-      SELECT s, t FROM edges
-      UNION
-      SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
-      WHERE e.t <> r.s)
-    SELECT s AS doc_id, LEAST(s, MIN(t)) AS cluster_id
-    FROM reach GROUP BY s
-    """,
-)
+@query("dedup_clusters_incremental", oracle=ORACLES["dedup_clusters"])
 def dedup_clusters_incremental(spark, sf):
     """INCREMENTAL cluster maintenance (VERDICT r08 task 2) — the last
     non-incremental stage in the ingest dedup path: the standing
@@ -237,31 +213,7 @@ def dedup_clusters_incremental(spark, sf):
         ).select(F.col("node").alias("doc_id"), "cluster_id")
 
 
-@query(
-    "dedup_clusters_roundtrip",
-    oracle="""
-    WITH RECURSIVE
-    sh AS (SELECT doc_id,
-           list_distinct(list_transform(
-               range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '\\s+')) - 2, 1) + 1),
-               i -> array_to_string((regexp_split_to_array(lower(trim(text)), '\\s+'))[i:i+2], ' ')))
-           AS s FROM documents),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s))
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.8),
-    edges AS (SELECT id_a AS s, id_b AS t FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    reach AS (
-      SELECT s, t FROM edges
-      UNION
-      SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
-      WHERE e.t <> r.s)
-    SELECT s AS doc_id, LEAST(s, MIN(t)) AS cluster_id
-    FROM reach GROUP BY s
-    """,
-)
+@query("dedup_clusters_roundtrip", oracle=ORACLES["dedup_clusters"])
 def dedup_clusters_roundtrip(spark, sf):
     """STATE-TABLE round-trip for incremental clustering (round 9 —
     completes the task-2 operational loop): the standing (node → root)
@@ -1889,43 +1841,7 @@ def search_bm25_topk(spark, sf):
     return bm25_topk(tf, dl, stats, qterms, k=5)
 
 
-@query(
-    "search_bm25_append",
-    oracle="""
-    WITH tok AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS t
-      FROM documents),
-    tok2 AS (SELECT doc_id, t FROM tok WHERE t <> ''),
-    tf AS (SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM tok2 GROUP BY 1, 2),
-    dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl
-           FROM tok2 GROUP BY 1),
-    stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nd,
-                     CAST(SUM(dl) AS DOUBLE) AS tt FROM dl),
-    q(qid, t) AS (VALUES (1, 'hash'), (1, 'join'), (2, 'vector'),
-                         (2, 'scan'), (3, 'merge'), (3, 'sort'),
-                         (3, 'batch')),
-    terms AS (SELECT DISTINCT t FROM q),
-    post AS (SELECT tf.* FROM tf JOIN terms USING (t)),
-    dft AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS df FROM post GROUP BY 1),
-    ts AS (SELECT p.doc_id, p.t,
-                  round(round(ln((s.nd - d.df + 0.5) / (d.df + 0.5) + 1.0), 9)
-                        * (p.tf * 2.2)
-                        / round(p.tf + 1.2 * (0.25 + 0.75 * l.dl
-                                              / (s.tt / s.nd)), 9),
-                        9) AS tsc
-           FROM post p JOIN dft d USING (t) JOIN dl l USING (doc_id),
-                stats s),
-    sc AS (SELECT q.qid, ts.doc_id, round(SUM(tsc), 6) AS bm25
-           FROM ts JOIN q USING (t) GROUP BY 1, 2),
-    r AS (SELECT qid, doc_id, bm25,
-                 ROW_NUMBER() OVER (PARTITION BY qid
-                                    ORDER BY bm25 DESC, doc_id) AS rnk
-          FROM sc)
-    SELECT qid, doc_id, bm25, rnk FROM r WHERE rnk <= 5
-    """,
-)
+@query("search_bm25_append", oracle=ORACLES["search_bm25_topk"])
 def search_bm25_append(spark, sf):
     """BM25 postings APPEND ≡ REBUILD (round 11, VERDICT r10 task 2 —
     the lexical leg was the only standing index family without
@@ -2229,13 +2145,7 @@ def search_maxsim_topk(spark, sf):
     return maxsim_topk(tok2, qtokens, k=5, dim=16, exclude_self=True)
 
 
-@query(
-    "search_maxsim_append",
-    oracle=f"""
-    WITH {SQL_MAXSIM_LEG}
-    SELECT qid, doc_id, maxsim, rnk FROM mr WHERE rnk <= 5
-    """,
-)
+@query("search_maxsim_append", oracle=ORACLES["search_maxsim_topk"])
 def search_maxsim_append(spark, sf):
     """MaxSim index APPEND ≡ REBUILD (round 11 — the multi-vector
     leg's incremental maintenance, completing the standing-index

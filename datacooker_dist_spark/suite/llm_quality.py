@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import tokens_col
 from ..operators.text import STOPWORDS as _STOP
-from . import memo, query, scoped_conf, table
+from . import ORACLES, memo, query, scoped_conf, table
 from .llm import SQL_SHINGLES, SQL_TOKENS, _LANG_SCORE_SQL
 
 _STOP_SQL = "('" + "', '".join(_STOP) + "')"
@@ -806,8 +806,8 @@ def shared_quality_classifier(spark, sf):
     # is an explicit broadcast) and charges a driver-synchronized stage
     # re-optimization per aggregate. A property of the PLAN SHAPE, not of
     # bench scale: at any corpus size each iteration's aggregate output
-    # is one row. The scope covers the single collect; scoped_conf takes
-    # no lock, so a job another thread runs meanwhile also sees AQE off.
+    # is one row. The scope covers the single collect, and no
+    # concurrently() leg runs on another thread while it holds.
     with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
         row = w_df.collect()[0]
     return [row[i] for i in range(_QCLS_D + 2)]
@@ -990,7 +990,10 @@ def quality_classifier_score(spark, sf):
     )
 
 
-@query("quality_classifier_roundtrip", oracle=_qcls_score_oracle())
+@query(
+    "quality_classifier_roundtrip",
+    oracle=ORACLES["quality_classifier_score"],
+)
 def quality_classifier_roundtrip(spark, sf):
     """Model-artifact ROUND-TRIP for the learned quality classifier
     (VERDICT r08 task 3, the ``sketch_roundtrip`` /

@@ -13,6 +13,8 @@ from ..streaming.pipeline import (
 )
 from . import (
     EVENTS_RAW_SCHEMA,
+    NO_MISMATCHES,
+    ORACLES,
     is_path_not_found,
     query,
     read_parquet_or_empty,
@@ -257,25 +259,7 @@ def stream_dedup(spark, sf):
     return out
 
 
-@query(
-    "stream_session",
-    oracle="""
-    WITH flags AS (
-      SELECT user_id, ts,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       >= INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events),
-    sess AS (
-      SELECT user_id, ts,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM flags)
-    SELECT user_id, MIN(ts) AS session_start,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM sess GROUP BY user_id, sid
-    """,
-)
+@query("stream_session", oracle=ORACLES["window_session"])
 def stream_session(spark, sf):
     """Session windows (30-min gap) through the streaming engine's native
     session_window state — sessions merge as events arrive, watermark
@@ -486,12 +470,7 @@ def stream_stream_join(spark, sf):
     )
 
 
-@query(
-    "stream_dedup_watermark",
-    oracle="""
-    SELECT DISTINCT user_id, event_type FROM events
-    """,
-)
+@query("stream_dedup_watermark", oracle=ORACLES["stream_dedup"])
 def stream_dedup_watermark(spark, sf):
     """Watermark-scoped streaming dedup (dropDuplicatesWithinWatermark) —
     the UNBOUNDED-stream variant of stream_dedup: state for a key is
@@ -555,10 +534,7 @@ def stream_ema(spark, sf):
     return emitted.select("user_id", "event_id", "ema_cents")
 
 
-@query(
-    "stream_similarity_topk",
-    oracle="SELECT CAST(0 AS BIGINT) AS mismatches, TRUE AS nonempty",
-)
+@query("stream_similarity_topk", oracle=NO_MISMATCHES)
 def stream_similarity_topk(spark, sf):
     """Streaming ANN search against a standing PQ index — the vector twin
     of ``stream_dedup_near`` and the ingest-time shape of a 100 TB
@@ -688,15 +664,7 @@ def stream_substring_dedup(spark, sf):
 
 @query(
     "stream_heavy_hitters",
-    oracle="""
-    WITH tok AS (
-      SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
-      FROM documents),
-    cnt AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS exact_n
-            FROM tok WHERE token <> '' GROUP BY token)
-    SELECT token, exact_n, TRUE AS mg_within_bound
-    FROM cnt ORDER BY exact_n DESC, token LIMIT 10
-    """,
+    oracle=ORACLES["sketch_misra_gries_heavyhitters"],
 )
 def stream_heavy_hitters(spark, sf):
     """Streaming heavy hitters — the ingest-time twin of
@@ -749,10 +717,7 @@ def stream_heavy_hitters(spark, sf):
     return mg_bound_report(toks, merged, k)
 
 
-@query(
-    "stream_search_bm25",
-    oracle="SELECT CAST(0 AS BIGINT) AS mismatches, TRUE AS nonempty",
-)
+@query("stream_search_bm25", oracle=NO_MISMATCHES)
 def stream_search_bm25(spark, sf):
     """Streaming BM25 search against a standing posting index — the
     lexical twin of ``stream_similarity_topk``, completing the
@@ -820,10 +785,7 @@ def stream_search_bm25(spark, sf):
     )
 
 
-@query(
-    "stream_search_bm25_append",
-    oracle="SELECT CAST(0 AS BIGINT) AS mismatches, TRUE AS nonempty",
-)
+@query("stream_search_bm25_append", oracle=NO_MISMATCHES)
 def stream_search_bm25_append(spark, sf):
     """Streaming BM25 postings APPEND (round 11, VERDICT r10 task 2 —
     the per-micro-batch form of ``search_bm25_append``, completing the
@@ -1245,10 +1207,7 @@ def stream_append_retrain(spark, sf):
     )
 
 
-from .llm import _semdedup_inc_oracle as _ssem_oracle  # noqa: E402
-
-
-@query("stream_semantic_dedup", oracle=_ssem_oracle())
+@query("stream_semantic_dedup", oracle=ORACLES["dedup_semantic_incremental"])
 def stream_semantic_dedup(spark, sf):
     """Streaming SemDeDup — the ingest-time twin of
     ``dedup_semantic_incremental`` (the semantic family now ships
@@ -1290,13 +1249,7 @@ def stream_semantic_dedup(spark, sf):
     return read_parquet_or_empty(spark, _pair_schema, target, recursive=True)
 
 
-def _stream_er_oracle():
-    from .embml import er_classify_oracle
-
-    return er_classify_oracle()
-
-
-@query("stream_er_match", oracle=_stream_er_oracle())
+@query("stream_er_match", oracle=ORACLES["er_match_classify"])
 def stream_er_match(spark, sf):
     """Streaming twin of the Fellegi–Sunter classifier — the production
     linkage topology: source-B records ARRIVE as a stream, each
@@ -1408,13 +1361,7 @@ def stream_dedup_phash(spark, sf):
     )
 
 
-def _stream_qcls_oracle():
-    from .llm_quality import _qcls_score_oracle
-
-    return _qcls_score_oracle()
-
-
-@query("stream_quality_classifier", oracle=_stream_qcls_oracle())
+@query("stream_quality_classifier", oracle=ORACLES["quality_classifier_score"])
 def stream_quality_classifier(spark, sf):
     """Streaming twin of the LEARNED quality filter — model serving at
     ingest: documents arrive as a stream, each micro-batch featurizes
@@ -1707,36 +1654,7 @@ def stream_audio_fingerprint(spark, sf):
     )
 
 
-def _stream_kmv_oracle():
-    from .core_ext import _KMV_K, _KMV_MOD
-
-    return f"""
-    WITH h AS (
-      SELECT DISTINCT o_orderpriority,
-             (o_custkey * 2654435761 + 12345) % {_KMV_MOD} AS u
-      FROM orders),
-    r AS (
-      SELECT o_orderpriority, u,
-             ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                                ORDER BY u) AS rk
-      FROM h),
-    t AS (
-      SELECT o_orderpriority,
-             COUNT(DISTINCT o_custkey) AS true_distinct
-      FROM orders GROUP BY o_orderpriority)
-    SELECT r.o_orderpriority,
-           CAST(u AS BIGINT) AS kth_min,
-           CAST(round(({_KMV_K} - 1) * {_KMV_MOD}.0 / u) AS BIGINT)
-             AS est_distinct,
-           CAST(true_distinct AS BIGINT) AS true_distinct,
-           round(abs(round(({_KMV_K} - 1) * {_KMV_MOD}.0 / u)
-                     - true_distinct) / true_distinct, 4) AS rel_err
-    FROM r JOIN t USING (o_orderpriority)
-    WHERE rk = {_KMV_K}
-    """
-
-
-@query("stream_kmv_sketch", oracle=_stream_kmv_oracle())
+@query("stream_kmv_sketch", oracle=ORACLES["sketch_kmv_distinct"])
 def stream_kmv_sketch(spark, sf):
     """Streaming KMV distinct sketch — the operational face of the r09
     mergeable rewrite (VERDICT r08 task 1): order rows ARRIVE as a
@@ -1878,36 +1796,7 @@ def stream_geo_fence(spark, sf):
     )
 
 
-def _stream_forget_oracle():
-    return """
-    WITH forget AS (
-      SELECT c_custkey FROM customer WHERE c_custkey % 53 = 0),
-    o AS (SELECT o_orderkey, o_custkey FROM orders),
-    purged_o AS (SELECT o_orderkey FROM o
-                 WHERE o_custkey IN (SELECT c_custkey FROM forget)),
-    counts AS (
-      SELECT 'customer' AS table_name,
-             (SELECT COUNT(*) FROM forget) AS n_purged,
-             (SELECT COUNT(*) FROM customer)
-               - (SELECT COUNT(*) FROM forget) AS n_kept
-      UNION ALL
-      SELECT 'orders',
-             (SELECT COUNT(*) FROM purged_o),
-             (SELECT COUNT(*) FROM o) - (SELECT COUNT(*) FROM purged_o)
-      UNION ALL
-      SELECT 'lineitem',
-             (SELECT COUNT(*) FROM lineitem
-              WHERE l_orderkey IN (SELECT o_orderkey FROM purged_o)),
-             (SELECT COUNT(*) FROM lineitem)
-               - (SELECT COUNT(*) FROM lineitem
-                  WHERE l_orderkey IN (SELECT o_orderkey FROM purged_o)))
-    SELECT table_name, CAST(n_purged AS BIGINT) AS n_purged,
-           CAST(n_kept AS BIGINT) AS n_kept
-    FROM counts
-    """
-
-
-@query("stream_forget_cascade", oracle=_stream_forget_oracle())
+@query("stream_forget_cascade", oracle=ORACLES["privacy_forget_cascade"])
 def stream_forget_cascade(spark, sf):
     """Streaming twin of ``privacy_forget_cascade`` — deletion requests
     ARRIVE as a stream (the real GDPR topology: a requests queue, not a
@@ -2072,10 +1961,7 @@ def stream_artifact_vacuum(spark, sf):
     return spark.createDataFrame(rows, "check_name string, n_rows long")
 
 
-@query(
-    "stream_eval_contamination",
-    oracle="SELECT CAST(0 AS BIGINT) AS mismatches, TRUE AS nonempty",
-)
+@query("stream_eval_contamination", oracle=NO_MISMATCHES)
 def stream_eval_contamination(spark, sf):
     """INGEST-TIME contamination gate (round 11 — the streaming twin of
     ``eval_contamination_report``): once an eval set is frozen, every

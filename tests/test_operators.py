@@ -166,6 +166,34 @@ def test_connected_components_chain(spark):
                    20: 20, 21: 20, 22: 20, 23: 20}
 
 
+def test_connected_components_caps_parts_at_input_partitions(
+    spark, monkeypatch
+):
+    """An explicit ``parts`` wider than the input cannot widen the first
+    pass (coalesce is narrow), so a 1-partition pair frame takes one
+    union-find pass and no checkpoint, with the same labels."""
+    from datacooker_dist_spark.functions import checkpoints
+    from datacooker_dist_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(2, 1), (2, 3), (10, 11)], "id_a long, id_b long"
+    ).coalesce(1)
+    calls = []
+    real = checkpoints.CheckpointChain.checkpoint
+
+    def counting(self, df):
+        calls.append(df)
+        return real(self, df)
+
+    monkeypatch.setattr(checkpoints.CheckpointChain, "checkpoint", counting)
+    got = {
+        r.id_a: r.cluster_id
+        for r in connected_components(pairs, parts=4).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    assert calls == []
+
+
 def test_grid_radius_join_matches_brute_force(spark):
     from pyspark.sql import functions as F
 

@@ -600,14 +600,26 @@ _DOMAIN_BOUNDED_GLOBAL_WINDOW = {
 }
 
 
-def test_sweep_no_unbounded_global_window_in_any_query(spark):
+@pytest.fixture(scope="module")
+def swept_frames(spark):
+    """Every shipped non-streaming query outside the audited registry,
+    built once for the module: both suite-wide sweeps inspect the same
+    executed plans, and one build of all of them takes minutes."""
+    frames = {
+        name: QUERIES[name](spark, SF_SMALL)
+        for name in sorted(QUERIES)
+        if not name.startswith("stream_")
+        and name not in _DOMAIN_BOUNDED_GLOBAL_WINDOW
+    }
+    yield frames
+    frames.clear()
+
+
+def test_sweep_no_unbounded_global_window_in_any_query(swept_frames):
     """Suite-wide guard: no shipped (non-streaming) query plan contains a
     single-partition global-window Exchange over unbounded input."""
     flagged = {}
-    for name in sorted(QUERIES):
-        if name.startswith("stream_") or name in _DOMAIN_BOUNDED_GLOBAL_WINDOW:
-            continue
-        df = QUERIES[name](spark, SF_SMALL)
+    for name, df in swept_frames.items():
         bad = _unbounded_global_windows(df)
         if bad:
             flagged[name] = bad
@@ -692,7 +704,7 @@ def _unbounded_single_partition_gathers(df) -> list[str]:
     return out
 
 
-def test_sweep_no_unbounded_single_partition_gather(spark):
+def test_sweep_no_unbounded_single_partition_gather(swept_frames):
     """Suite-wide guard (generalizes the global-window sweep): no shipped
     non-streaming query may gather an unbounded row volume into a single
     task. The only tolerated shapes are the three documented key-domain-
@@ -700,13 +712,8 @@ def test_sweep_no_unbounded_single_partition_gather(spark):
     BEFORE the gather — the physical plan can't see the domain bound, so
     they are justified by name, same registry as the window sweep)."""
     flagged = {}
-    for name in sorted(QUERIES):
-        if (
-            name.startswith("stream_")
-            or name in _DOMAIN_BOUNDED_GLOBAL_WINDOW
-        ):
-            continue
-        bad = _unbounded_single_partition_gathers(QUERIES[name](spark, SF_SMALL))
+    for name, df in swept_frames.items():
+        bad = _unbounded_single_partition_gathers(df)
         if bad:
             flagged[name] = bad
     assert not flagged, f"unbounded single-partition gathers: {flagged}"

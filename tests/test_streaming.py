@@ -645,3 +645,35 @@ def test_drain_returns_leg_results_in_order(spark, tmp_path):
     )
     assert out == ["first", "second"]
     assert rows == [1]
+
+
+def test_drain_inside_a_scope_sees_the_scoped_value(spark, tmp_path):
+    """A drain started inside a conf scope on the same thread runs its
+    stream and legs under the scoped value instead of waiting for the
+    scope to end."""
+    from datacooker_dist_spark.session import scoped_conf
+
+    key = "spark.sql.shuffle.partitions"
+    with scoped_conf(spark, key, 3):
+        out = drain(
+            _one_batch_stream(spark, tmp_path),
+            lambda df, batch_id: None,
+            str(tmp_path / "ckpt"), alongside=(lambda: spark.conf.get(key),),
+        )
+    assert out == ["3"]
+
+
+def test_drain_batch_fn_entering_a_scope_raises(spark, tmp_path):
+    """The batch function runs while the drain holds the conf lock, so a
+    scope inside it raises (naming the key) instead of deadlocking."""
+    from datacooker_dist_spark.session import scoped_conf
+
+    def batch_fn(df, batch_id):
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", 3):
+            df.count()
+
+    with pytest.raises(Exception, match="spark.sql.shuffle.partitions"):
+        drain(
+            _one_batch_stream(spark, tmp_path), batch_fn,
+            str(tmp_path / "ckpt"),
+        )
