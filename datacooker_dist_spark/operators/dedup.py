@@ -3,12 +3,12 @@
 Exact, MinHash+LSH, SimHash, and n-gram-Jaccard near-dup — all expressed with
 JVM-side built-ins (no Python UDFs in the hot path):
 
-- MinHash signatures come from ``F.transform`` over seed literals ×
-  ``F.xxhash64`` over shingles — whole-stage codegen, no pyspark.ml vector
+- MinHash signatures are one hash aggregate of seed-salted ``xxhash64``
+  minima over shingle hashes — whole-stage codegen, no pyspark.ml vector
   conversion cost.
-- LSH banding turns the O(n²) pair space into an equi-join on
-  (band_id, band_hash): at 100 TB the candidate generation is ONE shuffle
-  keyed by band buckets; only bucket-mates are paired.
+- LSH banding turns the O(n²) pair space into one aggregate keyed by
+  (band, bhash): at 100 TB the candidate generation is ONE shuffle keyed
+  by band buckets; only bucket-mates are paired.
 - Exact-Jaccard verification runs on candidates only.
 """
 
@@ -135,12 +135,12 @@ def minhash_signature_table(
     # num_hashes families by re-hashing the fixed 8-byte long with a seed
     # column — string hashing is the expensive part; long hashing is cheap
     # and stays ANSI-safe (no wraparound arithmetic).
+    # The aggregates are SQL text: 3 py4j round trips each instead of ~29
+    # for the Column-API form, with the same expressions (so the same
+    # hashes).
     hashed = sh.select(id_col, F.xxhash64("_sh").alias("_h"))
     return hashed.groupBy(id_col).agg(
-        *[
-            F.min(F.xxhash64("_h", F.lit(s))).alias(f"_m{s}")
-            for s in range(num_hashes)
-        ]
+        *[F.expr(f"min(xxhash64(_h, {s})) AS _m{s}") for s in range(num_hashes)]
     )
 
 
@@ -166,22 +166,13 @@ def lsh_band_index(
     sig = minhash_signature_table(
         docs, id_col, text_col, num_hashes, shingle_n, num_partitions, shingles
     )
-    return sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"_m{b * rows_per_band + j}") for j in range(rows_per_band)]
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_b"),
-    ).select(id_col, F.col("_b.band").alias("band"), F.col("_b.bhash").alias("bhash"))
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'bhash', xxhash64("
+        + ", ".join(f"_m{b * rows_per_band + j}" for j in range(rows_per_band))
+        + "))"
+        for b in range(bands)
+    )
+    return sig.select(id_col, F.expr(f"inline(array({structs}))"))
 
 
 def cap_bucket_size(
@@ -192,12 +183,14 @@ def cap_bucket_size(
     """Drop LSH buckets with more than ``max_bucket`` members — the
     standard stop-bucket mitigation for candidate-pair skew: a degenerate
     bucket of B members (boilerplate, empty strings, template text)
-    contributes B² pairs to the bucket self-join, which is THE way a
-    linear LSH plan goes quadratic at 100 TB. Members of an oversized
-    bucket are so common that they pair far beyond any useful dup set;
-    dropping the bucket trades that recall tail (docs agreeing ONLY in
-    stop-buckets) for a hard per-bucket pair bound of max_bucket². One
-    extra hash aggregate + semi join on the bucket key."""
+    matches every probe row of its bucket B times in the index join of
+    :func:`incremental_near_dup_pairs`, which is THE way a linear LSH plan
+    goes quadratic at 100 TB. Members of an oversized bucket are so
+    common that they pair far beyond any useful dup set; dropping the
+    bucket trades that recall tail (docs agreeing ONLY in stop-buckets)
+    for a hard per-bucket bound. One extra hash aggregate + semi join on
+    the bucket key; :func:`minhash_lsh_candidates` applies the same bound
+    inside its own bucket aggregate instead."""
     sizes = (
         banded.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -237,31 +230,27 @@ def minhash_lsh_candidates(
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded MinHash LSH:
-    a self-equi-join of :func:`lsh_band_index` on (band, bhash) yields only
-    bucket-mates. Shuffle volume is bands×docs rows — linear, never
-    quadratic. ``max_bucket`` (recommended at corpus scale) drops
-    degenerate stop-buckets via :func:`cap_bucket_size`, bounding any
-    bucket's pair contribution at max_bucket²."""
+    ONE aggregate of :func:`lsh_band_index` on (band, bhash) collects each
+    bucket's ids, and exploding that list twice yields only bucket-mates.
+    The index is read once, so its signature aggregate runs once; shuffle
+    volume is bands×docs rows — linear, never quadratic. Buckets with
+    fewer than 2 or (when ``max_bucket`` is set) more than ``max_bucket``
+    members are dropped — the bound :func:`cap_bucket_size` applies,
+    giving the same pairs — so any bucket contributes at most
+    max_bucket² pairs. An uncapped bucket's ids sit in one array row, so
+    ``max_bucket`` stays the guard at corpus scale (recommended there)."""
     banded = lsh_band_index(
         docs, id_col, text_col, num_hashes, bands, shingle_n,
         num_partitions, shingles,
     )
-    if max_bucket is not None:
-        banded = cap_bucket_size(banded, max_bucket)
-    a = banded.alias("a")
-    b = banded.alias("b")
+    n = F.size("_ids")
     return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.bhash") == F.col("b.bhash"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        banded.groupBy("band", "bhash")
+        .agg(F.collect_list(id_col).alias("_ids"))
+        .filter(n >= 2 if max_bucket is None else n.between(2, max_bucket))
+        .select(F.explode("_ids").alias("id_a"), "_ids")
+        .select("id_a", F.explode("_ids").alias("id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
 

@@ -44,8 +44,8 @@ def llm_prep(
     pipeline paying its own.
 
     ``max_bucket`` (default 512) stop-bucket-caps the LSH candidate stage
-    (:func:`~..operators.dedup.cap_bucket_size`): a degenerate bucket's
-    pair contribution is bounded at max_bucket² instead of going
+    (:func:`~..operators.dedup.minhash_lsh_candidates`): a degenerate
+    bucket's pair contribution is bounded at max_bucket² instead of going
     quadratic on boilerplate text — the default is far above any bucket
     the synthetic corpus produces (max 4 at sf0.1), so small-scale
     results are unaffected (asserted in tests); audit what a cap would

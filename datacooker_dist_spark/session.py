@@ -84,8 +84,10 @@ def fan_out(df, parallelism: int | None = None):
     proof obligation."""
     n = parallelism or default_parallelism(df.sparkSession)
     try:
-        # Physical-plan partition count of the frame as it stands
-        # (no job runs — this only materializes the RDD lineage).
+        # Physical-plan partition count of the frame as it stands. A
+        # plan without an exchange runs no job here; under AQE a plan
+        # that ends in an exchange runs its shuffle map stages as a job
+        # of their own, and the frame's own execution runs them again.
         current = df.rdd.getNumPartitions()
     except Exception:
         current = 0  # planning failure → keep the historical behavior

@@ -125,9 +125,10 @@ def shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Stop-bucket cap for every SHIPPED LSH candidate path (VERDICT r03 task
-# 3): buckets larger than this are dropped before the self-join, bounding
-# any single bucket's pair fanout at LSH_MAX_BUCKET² — the skew guard
-# that keeps the candidate join linear when a degenerate bucket
+# 3): buckets larger than this are dropped by the bucket aggregate before
+# their ids are paired, bounding any single bucket's pair fanout at
+# LSH_MAX_BUCKET² (and its id list at LSH_MAX_BUCKET ids) — the skew guard
+# that keeps candidate generation linear when a degenerate bucket
 # (boilerplate/empty/template text) shows up at corpus scale. 512 is
 # ~128× the largest bucket observed on the synthetic corpus (max 4 at
 # sf0.1, p99.9 = 3), so at test scales the cap provably drops nothing —

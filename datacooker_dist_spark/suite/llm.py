@@ -452,7 +452,7 @@ def dedup_ngram_jaccard(spark, sf):
     """Near-dup pairs with exact 3-gram Jaccard ≥ 0.8, candidates pruned by
     banded MinHash LSH (16 bands × 4 hashes ⇒ P[detect | j=0.8] ≈ 0.9998,
     →1 rapidly above). The oracle brute-forces all pairs — at engine scale
-    only the LSH-bucket equi-join runs, never the quadratic pair space."""
+    only LSH bucket-mates are paired, never the quadratic pair space."""
     from . import shared_jaccard_pairs
 
     return shared_jaccard_pairs(spark, sf)

@@ -539,9 +539,9 @@ def decontaminate_ngrams(spark, sf):
 )
 def dedup_edit_distance(spark, sf):
     """Edit-distance near-dup verification, candidate-driven: the pair
-    source is the shared banded-MinHash LSH bucket join (linear shuffle —
-    no cross join anywhere), and per-candidate Levenshtein ≤ 20 over
-    80-char normalized prefixes is the character-level verifier that
+    source is the shared banded-MinHash LSH bucket aggregate (linear
+    shuffle — no cross join anywhere), and per-candidate Levenshtein ≤ 20
+    over 80-char normalized prefixes is the character-level verifier that
     catches small in-place edits word-level Jaccard can miss. 16 bands ×
     4 hashes means a pair at full-text Jaccard 0.9 (the regime where
     prefix edits stay under the threshold) collides in ≥1 band with

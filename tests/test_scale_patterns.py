@@ -274,9 +274,9 @@ def test_global_prefix_sum_broadcast_offsets_past_threshold(spark):
 
 def test_lsh_stop_bucket_cap_prunes_degenerate_bucket(spark):
     """A planted degenerate bucket (many identical docs) must be dropped
-    by max_bucket — bounding the bucket self-join's pair fanout — while
-    normal-sized dup groups keep their candidates, and the plan stays an
-    equi-join (no cartesian)."""
+    by max_bucket — bounding the bucket's pair fanout — while
+    normal-sized dup groups keep their candidates, and the plan has no
+    cartesian product."""
     from pyspark.sql import functions as F
 
     from datacooker_dist_spark.operators.dedup import minhash_lsh_candidates

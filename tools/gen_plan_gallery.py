@@ -32,8 +32,11 @@ GALLERY = [
      "Bloom gate: the k word probes are `BroadcastHashJoin`s on the fact "
      "side — zero fact shuffles before the exact semi-join"),
     ("dedup_minhash_lsh",
-     "LSH candidates: a hash equi-join on (band, bucket-hash) — no "
-     "`CartesianProduct`/`BroadcastNestedLoopJoin` anywhere"),
+     "LSH candidates, built once per session and checkpointed, so the "
+     "query scans the checkpoint: the build is ONE `ObjectHashAggregate` "
+     "that collects each (band, bucket-hash) bucket's ids and a double "
+     "`explode` that pairs them — one MinHash signature aggregate, no join, "
+     "no `CartesianProduct`/`BroadcastNestedLoopJoin` anywhere"),
     ("agg_hash",
      "aggregation: `partial_` functions before the exchange (map-side "
      "combine), final aggregate after"),

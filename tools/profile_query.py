@@ -8,6 +8,9 @@ paths exactly like bench.py, then:
     separately;
   - counts the Spark jobs + stages + tasks the query scheduled (via a
     job group), separating plan-build-time jobs from execution jobs;
+  - counts the py4j round trips of the plan build (every
+    ``send_command`` of the gateway client, status reads excluded), the
+    driver cost of building a plan through the Column API;
   - optionally dumps ``explain("formatted")`` to a file.
 
 Usage:
@@ -53,6 +56,21 @@ def _job_stats(sc, group: str) -> dict:
     return {"jobs": len(jobs), "stages": n_stages, "tasks": n_tasks}
 
 
+def _count_py4j(sc) -> list[int]:
+    """Wrap the gateway client's ``send_command`` so each py4j round trip
+    from this process adds one to the returned one-element counter."""
+    client = sc._gateway._gateway_client
+    calls = [0]
+    send = client.send_command
+
+    def counted(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    return calls
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries")
@@ -76,6 +94,7 @@ def main() -> None:
 
     bench._python_path_warmup(spark)
     bench._table_warmup(spark, args.sf)
+    py4j_calls = _count_py4j(sc)
 
     results = {}
     for name in names:
@@ -83,9 +102,11 @@ def main() -> None:
         for rep in range(args.repeat):
             tag = f"prof-{name}-{rep}"
             sc.setJobGroup(tag, name)
+            c0 = py4j_calls[0]
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             t_build = time.perf_counter() - t0
+            build_py4j = py4j_calls[0] - c0
             build_stats = _job_stats(sc, tag)
 
             if args.plans_dir and rep == 0:
@@ -112,6 +133,7 @@ def main() -> None:
                 "build_sec": round(t_build, 3),
                 "exec_sec": round(t_exec, 3),
                 "total_sec": round(t_build + t_exec, 3),
+                "build_py4j": build_py4j,
                 "build_jobs": build_stats,
                 "exec_jobs": exec_stats,
             }
