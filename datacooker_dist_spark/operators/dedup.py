@@ -14,7 +14,7 @@ JVM-side built-ins (no Python UDFs in the hot path):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 TOKEN_PATTERN = "\\s+"
@@ -61,8 +61,6 @@ def shingle_rows(
     shorter docs yield their single partial gram (concat_ws drops the null
     leads). With ``cache=True`` persists MEMORY_AND_DISK so LSH candidate
     generation and exact verification share one pass."""
-    from pyspark.sql import Window
-
     tok = docs.select(
         F.col(id_col), F.posexplode(tokens_col(text_col)).alias("_pos", "_t")
     )
@@ -180,7 +178,7 @@ def cap_bucket_size(
     max_bucket: int,
     keys: tuple[str, str] = ("band", "bhash"),
 ) -> DataFrame:
-    """Drop LSH buckets with more than ``max_bucket`` members — the
+    """Drop LSH buckets with more than ``max_bucket`` index rows — the
     standard stop-bucket mitigation for candidate-pair skew: a degenerate
     bucket of B members (boilerplate, empty strings, template text)
     matches every probe row of its bucket B times in the index join of
@@ -188,16 +186,15 @@ def cap_bucket_size(
     goes quadratic at 100 TB. Members of an oversized bucket are so
     common that they pair far beyond any useful dup set; dropping the
     bucket trades that recall tail (docs agreeing ONLY in stop-buckets)
-    for a hard per-bucket bound. One extra hash aggregate + semi join on
-    the bucket key; :func:`minhash_lsh_candidates` applies the same bound
-    inside its own bucket aggregate instead."""
-    sizes = (
-        banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= max_bucket)
-        .select(*keys)
+    for a hard per-bucket bound. One row count per bucket over a window
+    (its buffer spills to disk, so a huge bucket is dropped without being
+    held in memory), then a filter; the output stays hash-partitioned on
+    ``keys``. Both LSH candidate paths cap through this function, so one
+    rule (rows per bucket) decides which buckets they drop."""
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return (
+        banded.withColumn("_n", n).filter(F.col("_n") <= max_bucket).drop("_n")
     )
-    return banded.join(sizes, list(keys), "left_semi")
 
 
 def oversized_buckets(
@@ -235,19 +232,21 @@ def minhash_lsh_candidates(
     The index is read once, so its signature aggregate runs once; shuffle
     volume is bands×docs rows — linear, never quadratic. Buckets with
     fewer than 2 or (when ``max_bucket`` is set) more than ``max_bucket``
-    members are dropped — the bound :func:`cap_bucket_size` applies,
-    giving the same pairs — so any bucket contributes at most
-    max_bucket² pairs. An uncapped bucket's ids sit in one array row, so
-    ``max_bucket`` stays the guard at corpus scale (recommended there)."""
+    members are dropped: :func:`cap_bucket_size` drops the oversized ones
+    before any ids are collected, so any bucket contributes at most
+    max_bucket² pairs and holds at most max_bucket ids. An uncapped
+    bucket's ids sit in one array row, so ``max_bucket`` stays the guard
+    at corpus scale (recommended there)."""
     banded = lsh_band_index(
         docs, id_col, text_col, num_hashes, bands, shingle_n,
         num_partitions, shingles,
     )
-    n = F.size("_ids")
+    if max_bucket is not None:
+        banded = cap_bucket_size(banded, max_bucket)
     return (
         banded.groupBy("band", "bhash")
         .agg(F.collect_list(id_col).alias("_ids"))
-        .filter(n >= 2 if max_bucket is None else n.between(2, max_bucket))
+        .filter(F.size("_ids") >= 2)
         .select(F.explode("_ids").alias("id_a"), "_ids")
         .select("id_a", F.explode("_ids").alias("id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
@@ -926,8 +925,6 @@ def containment_pairs(
     distinct-shingle arrays; the division is a single int/int → double,
     bit-identical across engines.
     """
-    from pyspark.sql import Window
-
     rows = (
         shingles
         if shingles is not None
@@ -1025,8 +1022,6 @@ def jaccard_pairs_allpairs(
     quadratic pair space, which is what lets the EXACT set double as
     a per-round measurement at bench scale.
     Output: (id_a < id_b, jaccard ≥ num/den)."""
-    from pyspark.sql import Window
-
     rows = (
         shingles
         if shingles is not None
@@ -1253,8 +1248,6 @@ def kgram_occurrence_rows(
     scale posture for a corpus-wide inverted index (hash collisions are
     negligible at 2^-64-per-pair and the downstream verification joins
     are hash-keyed exactly like the production systems this mirrors)."""
-    from pyspark.sql import Window
-
     tok = docs.select(
         F.col(id_col), F.posexplode(tokens_col(text_col)).alias("_p0", "_t")
     )
@@ -1306,8 +1299,6 @@ def substring_span_pairs(
     Output: (id_a, id_b, n_shared_windows, longest_span_tokens) where
     longest_span_tokens = longest run + k − 1.
     """
-    from pyspark.sql import Window
-
     g = grams if grams is not None else kgram_occurrence_rows(
         docs, k, id_col, text_col
     )
@@ -1436,8 +1427,6 @@ def incremental_substring_spans(
     at build time).
     Output: (id_new, id_base, n_shared_windows, longest_span_tokens).
     """
-    from pyspark.sql import Window
-
     gn = new_grams if new_grams is not None else kgram_occurrence_rows(
         new, k, id_col, text_col
     )

@@ -125,13 +125,12 @@ def shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Stop-bucket cap for every SHIPPED LSH candidate path (VERDICT r03 task
-# 3): buckets larger than this are dropped by the bucket aggregate before
-# their ids are paired, bounding any single bucket's pair fanout at
-# LSH_MAX_BUCKET² (and its id list at LSH_MAX_BUCKET ids) — the skew guard
-# that keeps candidate generation linear when a degenerate bucket
-# (boilerplate/empty/template text) shows up at corpus scale. 512 is
-# ~128× the largest bucket observed on the synthetic corpus (max 4 at
-# sf0.1, p99.9 = 3), so at test scales the cap provably drops nothing —
+# 3): buckets larger than this are dropped, bounding any single bucket's
+# pair fanout at LSH_MAX_BUCKET² — the skew guard that keeps candidate
+# generation linear when a degenerate bucket (boilerplate/empty/template
+# text) shows up at corpus scale. 512 is ~128× the largest bucket
+# observed on the synthetic corpus (max 4 at sf0.1, p99.9 = 3), so at
+# test scales the cap provably drops nothing —
 # asserted by ``tests/test_operators.py::test_lsh_default_cap_lossless``
 # — while still bounding a 100 TB degenerate bucket at ~262k pairs
 # instead of quadratic blowup. Pass ``max_bucket=None`` explicitly for

@@ -18,3 +18,14 @@ def spark():
     s = build_session(app_name="dds-tests", cpus=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def planted_bucket_docs(spark):
+    """100 identical boilerplate docs (one 100-member LSH bucket per band)
+    next to one exact pair of a unique text."""
+    boiler = [(i, "the exact same boilerplate footer text repeated")
+              for i in range(100)]
+    pair = [(1000, "a genuinely unique alpha beta gamma document body"),
+            (1001, "a genuinely unique alpha beta gamma document body")]
+    return spark.createDataFrame(boiler + pair, "doc_id long, text string")

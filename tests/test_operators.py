@@ -682,22 +682,20 @@ def test_lsh_default_cap_lossless(spark):
     assert audit.count() == 0
 
 
-def _planted_bucket_docs(spark):
-    """100 identical boilerplate docs (one 100-member bucket per band), an
-    exact pair, and five one-word variants of one text, whose buckets hold
-    from 2 to 5 members."""
-    boiler = [(i, "the exact same boilerplate footer text repeated")
-              for i in range(100)]
-    pair = [(1000, "a genuinely unique alpha beta gamma document body"),
-            (1001, "a genuinely unique alpha beta gamma document body")]
+@pytest.fixture
+def bucket_family_docs(spark, planted_bucket_docs):
+    """The planted stop-bucket corpus plus five one-word variants of one
+    text, whose buckets hold from 2 to 5 members."""
     words = "one two three four five six seven eight nine ten eleven twelve"
     family = [(2000 + k, words.replace(w, "zzz"))
               for k, w in enumerate(["one", "four", "nine", "twelve", "ten"])]
-    return spark.createDataFrame(boiler + pair + family, "doc_id long, text string")
+    return planted_bucket_docs.unionByName(
+        spark.createDataFrame(family, "doc_id long, text string")
+    )
 
 
 @pytest.mark.parametrize("max_bucket", [None, 2, 10])
-def test_lsh_candidates_equal_bucket_pairing(spark, max_bucket):
+def test_lsh_candidates_equal_bucket_pairing(bucket_family_docs, max_bucket):
     """The candidates are exactly the bucket-mate pairs of the band index,
     paired in Python over its collected rows, for buckets of 2 up to
     ``max_bucket`` members."""
@@ -708,7 +706,7 @@ def test_lsh_candidates_equal_bucket_pairing(spark, max_bucket):
         minhash_lsh_candidates,
     )
 
-    docs = _planted_bucket_docs(spark)
+    docs = bucket_family_docs
     buckets: dict = {}
     for r in lsh_band_index(docs).collect():
         buckets.setdefault((r.band, r.bhash), []).append(r.doc_id)
@@ -759,13 +757,32 @@ def _signature_aggregates(df) -> int:
 
 
 @pytest.mark.parametrize("max_bucket", [None, 10])
-def test_lsh_candidates_build_one_signature_aggregate(spark, max_bucket):
+def test_lsh_candidates_build_one_signature_aggregate(
+    bucket_family_docs, max_bucket
+):
     """Candidate generation reads its band index once: one MinHash
     signature aggregate, capped or not."""
-    cand = D.minhash_lsh_candidates(
-        _planted_bucket_docs(spark), max_bucket=max_bucket
-    )
+    cand = D.minhash_lsh_candidates(bucket_family_docs, max_bucket=max_bucket)
     assert _signature_aggregates(cand) == 1
+
+
+def test_lsh_cap_drops_buckets_before_collecting_ids(bucket_family_docs):
+    """With ``max_bucket`` set, the bucket aggregate that collects ids reads
+    rows already filtered by a per-bucket row count, so an oversized
+    bucket is never gathered into one array."""
+    import re
+
+    cand = D.minhash_lsh_candidates(bucket_family_docs, max_bucket=10)
+    plan = cand._jdf.queryExecution().optimizedPlan().toString()
+    nodes = [re.sub(r"^[\s:+-]*", "", line) for line in plan.splitlines()]
+    agg = next(i for i, n in enumerate(nodes) if "collect_list(" in n)
+    below = [n for n in nodes[agg + 1:] if not n.startswith("Project ")]
+    assert below[0].startswith("Filter ")
+    assert below[1].startswith(
+        "Window [count(1) windowspecdefinition(band#"
+    )
+    count_col = re.search(r" AS (\w+#\d+L)\]", below[1]).group(1)
+    assert f"{count_col} <= 10" in below[0]
 
 
 def test_llm_prep_builds_one_signature_aggregate(spark):

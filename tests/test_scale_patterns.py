@@ -272,7 +272,7 @@ def test_global_prefix_sum_broadcast_offsets_past_threshold(spark):
     assert a[-1][1] == Decimal(sum(i % 97 for i in range(5000)))
 
 
-def test_lsh_stop_bucket_cap_prunes_degenerate_bucket(spark):
+def test_lsh_stop_bucket_cap_prunes_degenerate_bucket(planted_bucket_docs):
     """A planted degenerate bucket (many identical docs) must be dropped
     by max_bucket — bounding the bucket's pair fanout — while
     normal-sized dup groups keep their candidates, and the plan has no
@@ -281,11 +281,7 @@ def test_lsh_stop_bucket_cap_prunes_degenerate_bucket(spark):
 
     from datacooker_dist_spark.operators.dedup import minhash_lsh_candidates
 
-    boiler = [(i, "the exact same boilerplate footer text repeated")
-              for i in range(100)]
-    pair = [(1000, "a genuinely unique alpha beta gamma document body"),
-            (1001, "a genuinely unique alpha beta gamma document body")]
-    docs = spark.createDataFrame(boiler + pair, "doc_id long, text string")
+    docs = planted_bucket_docs
     capped = minhash_lsh_candidates(docs, max_bucket=10)
     got = {(r.id_a, r.id_b) for r in capped.collect()}
     assert got == {(1000, 1001)}  # 100-doc stop-bucket gone, real pair kept

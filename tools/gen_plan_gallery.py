@@ -33,10 +33,11 @@ GALLERY = [
      "side — zero fact shuffles before the exact semi-join"),
     ("dedup_minhash_lsh",
      "LSH candidates, built once per session and checkpointed, so the "
-     "query scans the checkpoint: the build is ONE `ObjectHashAggregate` "
-     "that collects each (band, bucket-hash) bucket's ids and a double "
-     "`explode` that pairs them — one MinHash signature aggregate, no join, "
-     "no `CartesianProduct`/`BroadcastNestedLoopJoin` anywhere"),
+     "query scans the checkpoint: the build drops oversized buckets by a "
+     "per-bucket row count (`Window`), then ONE `ObjectHashAggregate` "
+     "collects each (band, bucket-hash) bucket's ids on the same exchange "
+     "and a double `explode` pairs them — one MinHash signature aggregate, "
+     "no join, no `CartesianProduct`/`BroadcastNestedLoopJoin` anywhere"),
     ("agg_hash",
      "aggregation: `partial_` functions before the exchange (map-side "
      "combine), final aggregate after"),
