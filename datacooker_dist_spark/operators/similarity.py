@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -73,6 +73,19 @@ def _dot_unrolled(a, b, n: int):
 
 def as_double_array(col):
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _rank_topk(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """The ranking tail of every top-k operator: per query, keep the
+    ``k`` best rows by (``score_col`` desc, neighbor_id asc) and number
+    them in ``rnk``. Scores are rounded upstream and ids break ties, so
+    the cut is deterministic under any partitioning."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= k
+    )
 
 
 def _round_half_up_nonneg(y):
@@ -183,8 +196,6 @@ def cosine_topk(
     :func:`cosine_topk_lsh` (bucketed equi-join) or :func:`cosine_topk_ivf`
     (cell-probe equi-join), which trade recall for corpus-scale pruning.
     """
-    from pyspark.sql.window import Window
-
     extra_q = [F.col(match_col).alias("_qm")] if match_col else []
     extra_c = [F.col(match_col).alias("_cm")] if match_col else []
     q = queries.select(
@@ -207,10 +218,7 @@ def cosine_topk(
         c.join(F.broadcast(q), on=cond)
         .select("query_id", "neighbor_id", cos.alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return _rank_topk(scored, "cosine", k)
 
 
 def _hyperplanes(spark, dim: int, planes: int, tables: int, seed: int = 42):
@@ -679,8 +687,6 @@ def ivf_cells(
     single linear pass.
     Returns (centroids(cell, cv), assigned(id, cell, vector)).
     """
-    from pyspark.sql import Window
-
     v = as_double_array(vec_col)
     ok = sample_order_key(id_col, sample_order)
     ids = (
@@ -797,15 +803,14 @@ def ivf_assign(
 
 def _centroid_topn_expr(
     cent_rows, cell_sql: str, vec_name: str, norm_name: str, n: int,
-    rounded: bool,
+    rounded: bool, with_cv: bool = False,
 ):
     """Top-``n`` nearest cells under STANDING centroids as ONE parsed
     SQL expression over a vector column ``vec_name`` (with its
     precomputed norm in ``norm_name``) — the shared selector behind
     :func:`ivf_assign` (rounded ranking, its oracle-stable contract)
-    and the probe-cell selection of :func:`cosine_topk_ivf`
-    (``rounded=False`` — the probe window historically ranked on the
-    RAW cosine, and the selector must preserve that exact ordering).
+    and :func:`_probe_cells` (the IVF probe ranks on the RAW cosine,
+    the IVF-PQ probes on the rounded one).
 
     A Column-API build of K·dim literals costs thousands of py4j round
     trips per call; the parser ingests the same tree in one call, and
@@ -822,7 +827,8 @@ def _centroid_topn_expr(
     normalized with + 0.0D so a −0.0 from negating a zero score
     compares equal to +0.0, exactly as a window sort normalizes floats.
     The struct sort on (−cosine, cell) is the (cosine desc, cell asc)
-    window ordering."""
+    window ordering. ``with_cv`` appends each cell's centroid as a last
+    ``cv`` field; cell ids are unique, so it never decides the order."""
     import math
 
     def dlit(x: float) -> str:
@@ -851,7 +857,49 @@ def _centroid_topn_expr(
     return F.expr(
         "slice(array_sort(transform(array(" + ",".join(structs) + "), "
         "c -> named_struct('_nc', -" + score
-        + " + 0.0D, 'cell', c.cell))), 1, " + str(int(n)) + ")"
+        + " + 0.0D, 'cell', c.cell" + (", 'cv', c.cv" if with_cv else "")
+        + "))), 1, " + str(int(n)) + ")"
+    )
+
+
+def _probe_cells(
+    qv: DataFrame, centroids: DataFrame, nprobe: int, rounded: bool,
+    with_cv: bool = False,
+) -> DataFrame:
+    """The probe-cell selector of the IVF search operators: each query
+    row of ``qv`` (``query_id``, ``_qv``, then any carried columns)
+    becomes one row per each of its ``nprobe`` nearest cells, as
+    (query_id, _qv, cell, carried...). The centroid table is collected
+    once at plan build and ranked per row by :func:`_centroid_topn_expr`
+    — a narrow Project+Generate: no query × centroid fan-out, no
+    exchange, no sort. ``rounded`` picks the score the cells rank on:
+    the raw cosine (:func:`cosine_topk_ivf`) or ``round(cosine, 6)``,
+    :func:`ivf_assign`'s ordering (the IVF-PQ probes); ties go to the
+    lower cell id either way. A NaN score ranks last, where a window
+    sort would rank it first. ``with_cv`` adds the selected cell's
+    centroid as ``_cv`` after ``cell``, taken from the same literal, so
+    no caller joins the centroid frame again. No centroids → no probe
+    rows."""
+    extra = qv.columns[2:]
+    cell_sql = centroids.schema["cell"].dataType.simpleString()
+    cent_rows = centroids.select("cell", "_cv").collect()
+    if not cent_rows:
+        cv = [F.lit(None).cast("array<double>").alias("_cv")] if with_cv else []
+        return qv.select(
+            "query_id", "_qv", F.lit(None).cast(cell_sql).alias("cell"),
+            *cv, *extra,
+        ).filter(F.lit(False))
+    top = _centroid_topn_expr(
+        cent_rows, cell_sql, "_qv", "_qn", int(nprobe), rounded=rounded,
+        with_cv=with_cv,
+    )
+    cv = [F.col("_t.cv").alias("_cv")] if with_cv else []
+    return (
+        qv.withColumn("_qn", _norm(F.col("_qv")))
+        .select("query_id", "_qv", F.explode(top).alias("_t"), *extra)
+        .select(
+            "query_id", "_qv", F.col("_t.cell").alias("cell"), *cv, *extra
+        )
     )
 
 
@@ -894,14 +942,13 @@ def cosine_topk_ivf(
     job is to undo the fanout. The centroid table is bounded by
     construction, so the selection now runs through the same
     constant-folded literal selector as :func:`ivf_assign`
-    (``rounded=False`` — the probe window ranked on the RAW cosine, and
-    the selector preserves that exact (cosine desc, cell asc) order):
-    a narrow Project+Generate, zero exchanges. The candidate join then
-    BROADCASTS the bounded probe list against the corpus-sized
-    assignment (queries are a bounded broadcast by the operator
-    contract) — the assignment table is never shuffled by the probe."""
-    from pyspark.sql import Window
-
+    (:func:`_probe_cells` with ``rounded=False`` — the probe window
+    ranked on the RAW cosine, and the selector preserves that exact
+    (cosine desc, cell asc) order): a narrow Project+Generate, zero
+    exchanges. The candidate join then BROADCASTS the bounded probe
+    list against the corpus-sized assignment (queries are a bounded
+    broadcast by the operator contract) — the assignment table is
+    never shuffled by the probe."""
     centroids, assigned = (
         cells
         if cells is not None
@@ -916,30 +963,9 @@ def cosine_topk_ivf(
             corpus.select(F.col(id_col), F.col(match_col).alias("_cm")),
             id_col,
         )
-    qv = queries.select(*qsel)
-    cell_sql = centroids.schema["cell"].dataType.simpleString()
-    cent_rows = centroids.select("cell", "_cv").collect()
-    if not cent_rows:
-        probes = qv.select(
-            "query_id", "_qv",
-            F.lit(None).cast(cell_sql).alias("cell"),
-            *(["_qm"] if match_col else []),
-        ).filter(F.lit(False))
-    else:
-        top = _centroid_topn_expr(
-            cent_rows, cell_sql, "_qv", "_qn", int(nprobe), rounded=False
-        )
-        probes = (
-            qv.withColumn("_qn", _norm(F.col("_qv")))
-            .select(
-                "query_id", "_qv", F.explode(top).alias("_t"),
-                *(["_qm"] if match_col else []),
-            )
-            .select(
-                "query_id", "_qv", F.col("_t.cell").alias("cell"),
-                *(["_qm"] if match_col else []),
-            )
-        )
+    probes = _probe_cells(
+        queries.select(*qsel), centroids, nprobe, rounded=False
+    )
     cand = assigned.join(F.broadcast(probes), "cell").filter(
         F.col("query_id") != F.col(id_col)
     )
@@ -957,10 +983,7 @@ def cosine_topk_ivf(
         # rows, deduped on the narrow 3-column projection (vectors are
         # already gone) before the rank.
         scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w2)).filter(F.col("rnk") <= k)
+    return _rank_topk(scored, "cosine", k)
 
 
 def cosine_topk_lsh(
@@ -989,8 +1012,6 @@ def cosine_topk_lsh(
     6 and 7 — the r08 canonical ordering beats the r07 head-of-list
     cut, which read 0.74/0.86/0.90 at the same probe counts).
     """
-    from pyspark.sql.window import Window
-
     if n_probes:
         qs = lsh_query_probes(
             queries, "query_id", dim, planes, tables, n_probes,
@@ -1025,10 +1046,7 @@ def cosine_topk_lsh(
     if round_digits is not None:
         cos = F.round(cos, round_digits)
     scored = cand.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return _rank_topk(scored, "cosine", k)
 
 
 def cosine_candidate_pairs(
@@ -1213,8 +1231,6 @@ def mine_hard_negatives(
     Output: (query_id, query_label, neighbor_id, neighbor_label, rnk,
     cosine).
     """
-    from pyspark.sql.window import Window
-
     q = anchors.select(
         F.col(id_col).alias("query_id"),
         F.col(label_col).alias("query_label"),
@@ -1236,15 +1252,11 @@ def mine_hard_negatives(
         "query_id", "query_label", "neighbor_id", "neighbor_label",
         cos.alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
     # rnk as long: the suite's ranked outputs are uniformly BIGINT so the
     # driver's type-sensitive schema compare matches the SQL oracle
     # (ADVICE r04 — row_number() is int32 natively).
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
+    return _rank_topk(scored, "cosine", k).withColumn(
+        "rnk", F.col("rnk").cast("long")
     )
 
 
@@ -1404,8 +1416,6 @@ def pq_codebooks(
     m·k rows, broadcast-sized by construction (dim·k doubles total,
     independent of corpus size).
     """
-    from pyspark.sql import Window
-
     sub_dim = dim // m
     ok = sample_order_key(id_col, sample_order)
     ids = (
@@ -1582,6 +1592,38 @@ def pq_encode(
     return src.mapInArrow(encode, out_schema)
 
 
+def _adc_table(qv: DataFrame, cb: DataFrame, dim: int, m: int) -> DataFrame:
+    """The ADC lookup table of the PQ probes, |Q|·m·k rows: for each
+    query (``query_id``, ``_qv``), sub-vector ``sub`` and codeword
+    ``code`` of the codebooks ``cb``, the dot product of the query's
+    sub-vector with that codeword on the 1e-6 integer grid (``_qd``),
+    plus the query norm (``_qnorm``). Callers broadcast it to every
+    code row; grid sums keep the scores exact under any partitioning."""
+    sub_dim = dim // m
+    qsubs = F.explode(
+        F.array(*[
+            F.struct(
+                F.lit(s).alias("sub"),
+                F.slice("_qv", s * sub_dim + 1, sub_dim).alias("_qs"),
+            )
+            for s in range(m)
+        ])
+    )
+    qdot = _dot_unrolled(F.col("_qs"), F.col("_cb"), sub_dim)
+    return (
+        qv.select("query_id", _norm("_qv").alias("_qnorm"), qsubs.alias("_s"))
+        .select(
+            "query_id", "_qnorm",
+            F.col("_s.sub").alias("sub"), F.col("_s._qs").alias("_qs"),
+        )
+        .join(F.broadcast(cb), "sub")
+        .select(
+            "query_id", "_qnorm", "sub", "code",
+            F.round(qdot * 1e6).cast("long").alias("_qd"),
+        )
+    )
+
+
 def cosine_topk_pq(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1610,8 +1652,6 @@ def cosine_topk_pq(
     deterministic under any partitioning (neighbor_id tiebreak).
     Output: (query_id, neighbor_id, pq_cosine, rnk ≤ k).
     """
-    from pyspark.sql import Window
-
     cb = (
         codebooks
         if codebooks is not None
@@ -1623,33 +1663,10 @@ def cosine_topk_pq(
         else pq_encode(corpus, cb, dim, m, id_col, vec_col)
     )
 
-    sub_dim = dim // m
     qv = queries.select(
         F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("_qv")
     )
-    qsubs = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice("_qv", s * sub_dim + 1, sub_dim).alias("_qs"),
-            )
-            for s in range(m)
-        ])
-    )
-    qdot = _dot_unrolled(F.col("_qs"), F.col("_cb"), sub_dim)
-    # |Q|·m·k rows: the ADC lookup table, broadcast to every code row.
-    table = (
-        qv.select("query_id", _norm("_qv").alias("_qnorm"), qsubs.alias("_s"))
-        .select(
-            "query_id", "_qnorm",
-            F.col("_s.sub").alias("sub"), F.col("_s._qs").alias("_qs"),
-        )
-        .join(F.broadcast(cb), "sub")
-        .select(
-            "query_id", "_qnorm", "sub", "code",
-            F.round(qdot * 1e6).cast("long").alias("_qd"),
-        )
-    )
+    table = _adc_table(qv, cb, dim, m)
     code_rows = enc.select(
         F.col(id_col).alias("neighbor_id"), "_norm",
         F.posexplode("codes").alias("sub", "code"),
@@ -1670,12 +1687,7 @@ def cosine_topk_pq(
             ).alias("pq_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= k
-    )
+    return _rank_topk(scored, "pq_cosine", k)
 
 
 def sq8_params(
@@ -1778,8 +1790,6 @@ def cosine_topk_sq8(
     non-matching candidates drop in the ADC join condition — BEFORE any
     scoring work, so each query ranks a full k from its eligible set at
     zero index growth."""
-    from pyspark.sql import Window
-
     p = params if params is not None else sq8_params(corpus, id_col, vec_col)
     enc = (
         encoded
@@ -1841,12 +1851,34 @@ def cosine_topk_sq8(
             ).alias("sq8_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sq8_cosine").desc(), F.col("neighbor_id").asc()
+    return _rank_topk(scored, "sq8_cosine", k)
+
+
+def _rerank_exact(
+    scored: DataFrame, qv: DataFrame, corpus: DataFrame, rerank: int,
+    k: int, id_col: str, vec_col: str,
+) -> DataFrame:
+    """The FAISS-style refine stage of the IVF-PQ probes: the top
+    ``rerank`` ADC candidates per query (``scored``'s ``pq_cosine``)
+    re-score with their TRUE vectors — an id-key join touching only
+    rerank·|Q| corpus rows, against the broadcast query vectors of
+    ``qv`` — and the top ``k`` rank on the exact rounded cosine.
+    Output: (query_id, neighbor_id, cosine, rnk ≤ k)."""
+    shortlist = _rank_topk(scored, "pq_cosine", rerank).select(
+        "query_id", "neighbor_id"
     )
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= k
+    cvec = corpus.select(
+        F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("_cv")
     )
+    exact = (
+        shortlist.join(cvec, "neighbor_id")
+        .join(F.broadcast(qv.select("query_id", "_qv")), "query_id")
+        .select(
+            "query_id", "neighbor_id",
+            F.round(cosine_expr(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
+        )
+    )
+    return _rank_topk(exact, "cosine", k)
 
 
 def cosine_topk_ivfpq(
@@ -1876,8 +1908,12 @@ def cosine_topk_ivfpq(
     executor memory across a cluster.
 
     Plan: one IVF assignment pass + one PQ encode pass build the index
-    (both linear, broadcast-joined); per query, the nprobe cell probes
-    equi-join the code table on cell id and ADC-score the survivors —
+    (both linear, broadcast-joined); each query's nprobe cells come
+    from the literal selector :func:`_probe_cells` (ranked on the
+    rounded cosine, then cell id, as :func:`ivf_assign` ranks — no
+    query × centroid fan-out, no exchange), the bounded probe rows are
+    broadcast against the code table on cell id, and the survivors are
+    ADC-scored —
     shuffle is bounded by |corpus|·nprobe/n_cells code rows, each m
     ints wide. Integer-grid score sums keep ranking deterministic.
     Output: (query_id, neighbor_id, pq_cosine, rnk ≤ k).
@@ -1901,8 +1937,6 @@ def cosine_topk_ivfpq(
     index growth, graded against exact filtered truth in
     ``similarity_filtered_recall``.
     """
-    from pyspark.sql import Window
-
     centroids, assigned = (
         cells
         if cells is not None
@@ -1926,47 +1960,14 @@ def cosine_topk_ivfpq(
             id_col,
         )
 
-    sub_dim = dim // m
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         as_double_array(vec_col).alias("_qv"),
         *([F.col(match_col).alias("_qm")] if match_col else []),
     )
-    # IVF probe: nprobe nearest cells per query (broadcast centroids).
-    qc = qv.join(F.broadcast(centroids))
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(cosine_expr(F.col("_qv"), F.col("_cv")), 6)),
-        F.col("cell"),
-    )
-    probes = (
-        qc.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "cell", *(["_qm"] if match_col else []))
-    )
-    # ADC lookup table, |Q|·m·k rows (broadcast).
-    qsubs = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice("_qv", s * sub_dim + 1, sub_dim).alias("_qs"),
-            )
-            for s in range(m)
-        ])
-    )
-    qdot = _dot_unrolled(F.col("_qs"), F.col("_cb"), sub_dim)
-    table = (
-        qv.select("query_id", _norm("_qv").alias("_qnorm"), qsubs.alias("_s"))
-        .select(
-            "query_id", "_qnorm",
-            F.col("_s.sub").alias("sub"), F.col("_s._qs").alias("_qs"),
-        )
-        .join(F.broadcast(cb), "sub")
-        .select(
-            "query_id", "_qnorm", "sub", "code",
-            F.round(qdot * 1e6).cast("long").alias("_qd"),
-        )
-    )
-    cand_rows = probes.join(index, "cell").filter(
+    probes = _probe_cells(qv, centroids, nprobe, rounded=True).drop("_qv")
+    table = _adc_table(qv, cb, dim, m)
+    cand_rows = index.join(F.broadcast(probes), "cell").filter(
         F.col("query_id") != F.col(id_col)
     )
     if match_col:
@@ -1997,35 +1998,9 @@ def cosine_topk_ivfpq(
             ).alias("pq_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_cosine").desc(), F.col("neighbor_id").asc()
-    )
     if not rerank:
-        return scored.withColumn("rnk", F.row_number().over(w)).filter(
-            F.col("rnk") <= k
-        )
-    shortlist = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("_cv")
-    )
-    exact = (
-        shortlist.join(cvec, "neighbor_id")
-        .join(F.broadcast(qv.select("query_id", "_qv")), "query_id")
-        .select(
-            "query_id", "neighbor_id",
-            F.round(cosine_expr(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rnk", F.row_number().over(w2)).filter(
-        F.col("rnk") <= k
-    )
+        return _rank_topk(scored, "pq_cosine", k)
+    return _rerank_exact(scored, qv, corpus, rerank, k, id_col, vec_col)
 
 
 def ivfpq_residual_index(
@@ -2150,8 +2125,8 @@ def cosine_topk_ivfpq_residual(
 
     Scoring decomposes exactly for dot products:
     ``dot(q, v) = dot(q, c) + dot(q, r)`` — the first term is one
-    scalar per (query, probed cell) computed during the probe ranking
-    (free: the probe already evaluates q·c), the second is the usual
+    scalar per (query, probed cell), computed once per selected cell
+    against the centroid the cell selector carries, the second is the usual
     ADC table lookup, with the table built from the FULL query against
     the RESIDUAL codebooks (unlike L2-metric FAISS, the cosine/IP
     table is cell-independent, so it stays |Q|·m·k rows). Both terms
@@ -2184,18 +2159,18 @@ def cosine_topk_ivfpq_residual(
     FAISS-standard expectation (residual ≥ raw) should hold; the
     operator is budget-for-budget correct either way.
 
-    Plan shape matches :func:`cosine_topk_ivfpq`: linear
-    broadcast-joined build passes (hoisted into
-    :func:`ivfpq_residual_index`; pass ``prebuilt`` to probe a
-    memoized/persisted index), candidate shuffle bounded by
-    |corpus|·spill·nprobe/n_cells code rows. ``rerank`` > 0 adds the
+    The probe, ADC table and refine stage are
+    :func:`cosine_topk_ivfpq`'s: linear broadcast-joined build passes
+    (hoisted into :func:`ivfpq_residual_index`; pass ``prebuilt`` to
+    probe a memoized/persisted index), the literal cell selector and
+    its broadcast probe rows, the broadcast lookup table, and one
+    shuffle of the candidate rows by query, bounded by
+    |corpus|·spill·nprobe/n_cells rows. ``rerank`` > 0 adds the
     same FAISS refine stage (exact cosine on the bounded ADC
     shortlist).
     Output: (query_id, neighbor_id, pq_cosine, rnk ≤ k) — or
     (..., cosine, rnk) when reranked.
     """
-    from pyspark.sql import Window
-
     centroids, cb, index = (
         prebuilt
         if prebuilt is not None
@@ -2205,21 +2180,15 @@ def cosine_topk_ivfpq_residual(
         )
     )
 
-    sub_dim = dim // m
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         as_double_array(vec_col).alias("_qv"),
     )
-    # Probe: nprobe nearest cells per query; carry dot(q, centroid) on
-    # the 1e-6 grid — the coarse term of the decomposed score.
-    qc = qv.join(F.broadcast(centroids))
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(cosine_expr(F.col("_qv"), F.col("_cv")), 6)),
-        F.col("cell"),
-    )
+    # Probe: nprobe nearest cells per query; the selected cell's
+    # centroid gives dot(q, centroid) on the 1e-6 grid — the coarse term
+    # of the decomposed score.
     probes = (
-        qc.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= nprobe)
+        _probe_cells(qv, centroids, nprobe, rounded=True, with_cv=True)
         .select(
             "query_id",
             "cell",
@@ -2228,34 +2197,16 @@ def cosine_topk_ivfpq_residual(
             .alias("_qc"),
         )
     )
-    # ADC lookup table over the RESIDUAL codebooks, |Q|·m·k rows.
-    qsubs = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice("_qv", s * sub_dim + 1, sub_dim).alias("_qs"),
-            )
-            for s in range(m)
-        ])
-    )
-    qdot = _dot_unrolled(F.col("_qs"), F.col("_cb"), sub_dim)
-    table = (
-        qv.select(
-            "query_id", _norm("_qv").alias("_qnorm"), qsubs.alias("_s")
-        )
-        .select(
-            "query_id", "_qnorm",
-            F.col("_s.sub").alias("sub"), F.col("_s._qs").alias("_qs"),
-        )
-        .join(F.broadcast(cb), "sub")
-        .select(
-            "query_id", "_qnorm", "sub", "code",
-            F.round(qdot * 1e6).cast("long").alias("_qd"),
-        )
-    )
+    # The table is built over the RESIDUAL codebooks.
+    table = _adc_table(qv, cb, dim, m)
+    # One shuffle of the candidate rows by query: the per-cell and
+    # per-pair aggregates and the per-query rank below then run in
+    # place (the broadcast probe join keeps the index's partitioning,
+    # which would cost one exchange per stage instead).
     cand_codes = (
-        probes.join(index, "cell")
+        index.join(F.broadcast(probes), "cell")
         .filter(F.col("query_id") != F.col(id_col))
+        .repartition("query_id")
         .select(
             "query_id", "cell", "_qc",
             F.col(id_col).alias("neighbor_id"), "_tnorm",
@@ -2282,38 +2233,9 @@ def cosine_topk_ivfpq_residual(
             ).alias("pq_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_cosine").desc(), F.col("neighbor_id").asc()
-    )
     if not rerank:
-        return scored.withColumn("rnk", F.row_number().over(w)).filter(
-            F.col("rnk") <= k
-        )
-    shortlist = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("_cv"),
-    )
-    exact = (
-        shortlist.join(cvec, "neighbor_id")
-        .join(F.broadcast(qv.select("query_id", "_qv")), "query_id")
-        .select(
-            "query_id", "neighbor_id",
-            F.round(
-                cosine_expr(F.col("_qv"), F.col("_cv")), 6
-            ).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rnk", F.row_number().over(w2)).filter(
-        F.col("rnk") <= k
-    )
+        return _rank_topk(scored, "pq_cosine", k)
+    return _rerank_exact(scored, qv, corpus, rerank, k, id_col, vec_col)
 
 
 def ivf_append_retrain_loop(
@@ -2947,8 +2869,6 @@ def _knn_truncate(scored: DataFrame, k: int) -> DataFrame:
     """Per-source top-k truncation by (cosine desc, dst asc) — the graph
     invariant every round re-establishes. Deterministic: rounded scores,
     id tiebreak."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("src").orderBy(
         F.col("cosine").desc(), F.col("dst").asc()
     )
@@ -3007,8 +2927,6 @@ def nndescent_round(
     graph built at a different grid would make the kept row
     partition-order-dependent; callers changing ``round_digits``
     mid-build must re-score the standing edges first."""
-    from pyspark.sql import Window
-
     w_rev = Window.partitionBy("src").orderBy(
         F.col("cosine").desc(), F.col("dst").asc()
     )
@@ -3060,8 +2978,6 @@ def _cocell_pairs(
     (xxhash64 rank per node) — ≤ n·seed_cap pairs total, all hash
     equi-joins. A spilled assignment (one node in ≥2 cells) surfaces a
     pair through each shared cell; the distinct collapses it."""
-    from pyspark.sql import Window
-
     a = assigned.select(F.col("node").alias("src"), "cell")
     b = assigned.select(F.col("node").alias("dst"), "cell")
     w_pool = Window.partitionBy("cell").orderBy(F.xxhash64("dst"), "dst")
@@ -3122,8 +3038,6 @@ def knn_graph_build(
 
     Output: (vec_id, neighbor_id, rnk, cosine) — ≤k ascending-rank
     exact-cosine-verified out-neighbors per node."""
-    from pyspark.sql import Window
-
     seed_cap = seed_cap if seed_cap is not None else 2 * k
     pool_cap = pool_cap if pool_cap is not None else 4 * k
     vectors = _knn_vectors(corpus, id_col, vec_col).localCheckpoint()
@@ -3190,8 +3104,6 @@ def cosine_topk_graph(
     before raising ``hops`` materially.
 
     Output: (query_id, neighbor_id, rnk, cosine)."""
-    from pyspark.sql import Window
-
     entry_cap = entry_cap if entry_cap is not None else 2 * k
     entry = cosine_topk_ivf(
         corpus, queries, k=entry_cap, nprobe=nprobe, cells=cells,
@@ -3249,13 +3161,7 @@ def cosine_topk_graph(
     )
     # Pairs are already distinct, so the rank window is the only
     # remaining exchange (hash(query_id)).
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    return _rank_topk(scored, "cosine", k)
 
 
 def knn_graph_append(
@@ -3297,8 +3203,6 @@ def knn_graph_append(
     the standing graph — never a rebuild, never a corpus shuffle,
     nothing super-linear in the batch. Output: the updated (vec_id,
     neighbor_id, rnk, cosine) graph over base ∪ new nodes."""
-    from pyspark.sql import Window
-
     entry_cap = entry_cap if entry_cap is not None else 2 * k
     new_base = cosine_topk_graph(
         base, new, graph=graph, cells=cells, k=k, nprobe=nprobe,
@@ -3369,8 +3273,6 @@ def knn_graph_forget(
     |forget| queries, O(k·|forget|) in the steady state) — never a
     rebuild, never a corpus shuffle. Output: (vec_id, neighbor_id,
     rnk, cosine) over the surviving nodes."""
-    from pyspark.sql import Window
-
     entry_cap = entry_cap if entry_cap is not None else 2 * k
     fids = forget.select(
         F.col(forget.columns[0]).alias("_fid")
@@ -3458,8 +3360,6 @@ def knn_graph_patch(
     (cosine desc, dst asc). Pure deterministic function of (graph,
     new_out), so two paths that agree on new_out agree on the whole
     patched graph. Output: (vec_id, neighbor_id, rnk, cosine)."""
-    from pyspark.sql import Window
-
     base_props = (
         new_out.join(
             new.select(F.col(id_col).alias("dst")), "dst", "left_anti"

@@ -50,16 +50,16 @@ def build_session(
     return b.getOrCreate()
 
 
-def default_parallelism(spark: SparkSession, fallback: int | None = None) -> int:
+def default_parallelism(spark: SparkSession) -> int:
     """Cluster default parallelism, safe under sessions with no JVM-backed
     SparkContext (e.g. Spark Connect)."""
     try:
         return spark.sparkContext.defaultParallelism
     except Exception:
-        return fallback or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def fan_out(df, parallelism: int | None = None):
+def fan_out(df):
     """Repartition a small-split scan to cluster parallelism before
     CPU-heavy per-row work (optimization guide §2.5: an unsplittable or
     single-split input starves every pre-shuffle stage — "repartition
@@ -82,7 +82,7 @@ def fan_out(df, parallelism: int | None = None):
     partition-invariant either way — the suite's odd-partitioning
     oracle mirror (DDS_SIM_CPUS=4 DDS_SIM_SHUFFLE=5) is the standing
     proof obligation."""
-    n = parallelism or default_parallelism(df.sparkSession)
+    n = default_parallelism(df.sparkSession)
     try:
         # Physical-plan partition count of the frame as it stands. A
         # plan without an exchange runs no job here; under AQE a plan

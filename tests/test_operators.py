@@ -2608,6 +2608,66 @@ def test_graph_search_superset_dominates_ivf(spark):
     assert len(gs) == 6 * 3
 
 
+@pytest.mark.parametrize("rounded", [False, True])
+def test_probe_cells_matches_window_ranking(spark, rounded):
+    """The literal cell selector behind the IVF and IVF-PQ probes keeps
+    the ordering of the window it replaced: (score desc, cell asc), the
+    score being the raw cosine or round(cosine, 6). Query 0 ties cells 1
+    and 3 exactly and has cell 0 1e-9 below them, a gap only the
+    rounded score closes; query 1 ties cells 2 and 5 at 0.0. The window
+    formulation below is the reference."""
+    from pyspark.sql import Window
+
+    from datacooker_dist_spark.operators.similarity import (
+        _probe_cells,
+        cosine_expr,
+    )
+
+    centroids = spark.createDataFrame(
+        [(5, [1.0, 0.0]), (3, [1.0, 1.0]), (1, [1.0, -1.0]),
+         (0, [1.0, 1.0 + 1e-9]), (2, [-1.0, 0.0])],
+        "cell int, _cv array<double>",
+    )
+    qv = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.5, -2.0])],
+        "query_id long, _qv array<double>",
+    )
+    score = cosine_expr(F.col("_qv"), F.col("_cv"))
+    if rounded:
+        score = F.round(score, 6)
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.col("cell"))
+    ranked = qv.crossJoin(centroids).withColumn("_rn", F.row_number().over(w))
+
+    def lists(rows):
+        out = {}
+        for r in rows:
+            out.setdefault(r.query_id, []).append(r.cell)
+        return out
+
+    for nprobe in (1, 2, 3, 5):
+        want = lists(
+            ranked.filter(F.col("_rn") <= nprobe).orderBy("query_id", "_rn")
+            .collect()
+        )
+        got = lists(_probe_cells(qv, centroids, nprobe, rounded).collect())
+        assert got == want, nprobe
+    top = lists(_probe_cells(qv, centroids, 5, rounded).collect())[0]
+    assert top == ([5, 0, 1, 3, 2] if rounded else [5, 1, 3, 0, 2])
+    # Known difference: a NaN score ranks last in the selector and first
+    # in the window. (A zero-norm centroid divides by zero, which raises
+    # in both under ANSI mode.)
+    nan = centroids.union(
+        spark.createDataFrame([(9, [float("nan"), 0.0])], centroids.schema)
+    )
+    got = lists(_probe_cells(qv, nan, 6, rounded).collect())
+    ref = lists(
+        qv.crossJoin(nan).withColumn("_rn", F.row_number().over(w))
+        .orderBy("query_id", "_rn").collect()
+    )
+    assert all(cells[-1] == 9 for cells in got.values())
+    assert all(cells[0] == 9 for cells in ref.values())
+
+
 def test_quantized_prefilter_label_respect_and_plan(spark):
     """match_col on the ADC scorers (round 10): every returned neighbor
     carries the query's label, each query ranks a full k from its

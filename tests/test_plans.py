@@ -490,13 +490,17 @@ def test_incremental_dedup_is_index_probe_equi_join(spark):
 
 def test_pq_paths_no_cartesian_and_broadcast_tables(spark):
     """PQ and IVF-PQ scoring must broadcast the per-query lookup table
-    (never shuffle it against the codes) and contain no cartesian."""
+    (never shuffle it against the codes) and contain no cartesian. The
+    IVF-PQ probes pick their cells with the literal selector, so no
+    plan fans queries out against the centroids in a
+    BroadcastNestedLoopJoin."""
     for name in (
         "similarity_topk_pq", "similarity_topk_ivfpq",
-        "similarity_topk_ivfpq_rerank",
+        "similarity_topk_ivfpq_rerank", "similarity_topk_ivfpq_residual",
     ):
         plan = executed_plan(spark, name)
         assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
         assert "BroadcastHashJoin" in plan, name
 
 
@@ -783,7 +787,7 @@ def test_round6_wave_plan_discipline(spark):
 
     resid = executed_plan(spark, "similarity_topk_ivfpq_residual")
     assert "CartesianProduct" not in resid
-    assert "BroadcastHashJoin" in resid  # ADC table + centroid probes
+    assert "BroadcastHashJoin" in resid  # ADC table + coarse-term centroids
 
     loop = executed_plan(spark, "similarity_append_retrain_loop")
     assert "CartesianProduct" not in loop
